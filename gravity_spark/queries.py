@@ -1276,7 +1276,7 @@ def sessionization(spark, sf_dir):
     prev = F.lag("ts").over(w)
     new_session = F.when(
         prev.isNull()
-        | ((F.unix_timestamp("ts") - F.unix_timestamp(prev)) > 1800),
+        | ((F.col("ts").cast("double") - prev.cast("double")) > 1800),
         F.lit(1),
     ).otherwise(F.lit(0))
     return (
@@ -2497,9 +2497,7 @@ def cdc_partitioned_merge(spark, sf_dir):
     )
     target.apply_batch(ch.filter(F.col("seq") <= cut), 0)
     target.apply_batch(ch.filter(F.col("seq") > cut), 1)
-    versions = [
-        (int(val), ver) for val, ver in target._manifest()["partitions"].items()
-    ]
+    versions = [(pt, target.partition_version(pt)) for pt in range(8)]
     vdf = spark.createDataFrame(versions, "pt long, partition_version long")
     return target.read().join(F.broadcast(vdf), "pt").select(
         "user_id", "amount", "pt", "partition_version"

@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 from gravity_spark.core.catalog import Catalog
 from gravity_spark.sinks.parquet_merge import ParquetMergeTarget
 
+# driver threads applying table slices at once
+MAX_PARALLEL_TABLES = 8
+
 
 class MultiTableMergeSink:
     """Routes envelope batches to per-table ParquetMergeTargets.
@@ -34,11 +37,9 @@ class MultiTableMergeSink:
         self,
         targets: Mapping[tuple[str, str], ParquetMergeTarget],
         catalog: Catalog,
-        max_parallel_tables: int = 8,
     ) -> None:
         self.targets = dict(targets)
         self.catalog = catalog
-        self.max_parallel_tables = max_parallel_tables
 
     def apply_batch(self, changes: DataFrame, epoch_id: int | None = None) -> None:
         present = [
@@ -63,17 +64,11 @@ class MultiTableMergeSink:
                 apply_one(work[0])
             else:
                 with ThreadPoolExecutor(
-                    max_workers=min(self.max_parallel_tables, len(work))
+                    max_workers=min(MAX_PARALLEL_TABLES, len(work))
                 ) as pool:
                     list(pool.map(apply_one, work))
         finally:
             cached.unpersist()
-
-    def foreach_batch(self):
-        def fn(df: DataFrame, epoch_id: int) -> None:
-            self.apply_batch(df, epoch_id)
-
-        return fn
 
     def read(self, database: str, table: str) -> DataFrame:
         return self.targets[(database, table)].read()

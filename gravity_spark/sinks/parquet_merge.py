@@ -1,47 +1,156 @@
 """Parquet merge sink: the MySQL-output equivalent for the local harness.
 
 Reference parity: pkg/outputs/mysql/mysql.go:222-482 (routed DML apply)
-with the engine variants in gravity_spark.operators.upsert. Without a
-transactional table format in the image, the sink maintains a parquet
-directory per (database, table) with an atomic swap:
+with the engine variants in gravity_spark.operators.upsert.
 
-    current state + change batch → merge_changes → write new version dir
-    → flip a pointer file
+Without a transactional table format in the image, a target is a set of
+**scopes**. A scope is a directory of immutable ``v{n}`` dirs, and one
+manifest (``_current.json``) names each scope's current version:
 
-At cluster scale the same code path targets Delta/Iceberg `MERGE INTO`
-(swap `_apply_batch` for a MERGE); partition-level rewrite replaces the
-full-version rewrite. The version-dir + pointer scheme keeps readers
-consistent (they always read a fully-written version) — the moral
-equivalent of the reference's position-flush-after-commit ordering
-(pkg/position_cache/cache.go:13,261).
+- an unpartitioned target is the single root scope, ``<path>/v{n}``;
+- a partitioned target has one scope per partition value,
+  ``<path>/p=<value>/v{n}``.
+
+Every change (an epoch's merge, a DDL rewrite, a compaction) writes the
+next version of each scope it touches, then flips the manifest with one
+atomic rename. Readers always see a fully written state, a crash before
+the flip leaves the old state current, and superseded versions stay
+readable until ``vacuum``. This is the idempotent-sink contract of
+Structured Streaming, and the moral equivalent of the reference's
+position-flush-after-commit ordering (pkg/position_cache/cache.go:13,261).
+At cluster scale a Delta/Iceberg ``MERGE INTO`` replaces the version write.
+
+Manifest keys: ``version`` counts commits (a root scope is rewritten by
+every commit, so its current dir is ``v{version}``), ``epoch`` is the
+last applied streaming epoch, ``partitions`` maps each partition value
+to its version, and ``schema`` / ``pk`` record the live schema so a
+re-opened target needs no DDL replay.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
-from typing import Sequence
+import shutil
+from typing import Callable, Sequence
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gravity_spark.operators.upsert import (
     ENGINE_INSERT_IGNORE,
+    ENGINE_ON_DUP_UPDATE,
     ENGINE_REPLACE,
     collapse_changes,
+    merge_aggregate,
     merge_changes,
     merge_collapsed,
 )
 
+# Spark's partition-path rendering of a NULL partition value
+_NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
 
-class ParquetMergeTarget:
+
+def _data_files(d: str) -> list[str]:
+    return [
+        os.path.join(d, e)
+        for e in os.listdir(d)
+        if e.endswith(".parquet") and not e.startswith("_")
+    ]
+
+
+class _ScopedVersions:
+    """Scopes of immutable ``v{n}`` dirs under ``path``, named by an
+    atomically replaced manifest. A scope map is ``{key: version}``; the
+    root scope's key is ``None``, and it is the only scope this base
+    class knows."""
+
+    def __init__(self, spark: SparkSession, path: str, schema_ddl: str) -> None:
+        self.spark = spark
+        self.path = path
+        self.schema_ddl = schema_ddl
+        os.makedirs(path, exist_ok=True)
+
+    @property
+    def _pointer(self) -> str:
+        return os.path.join(self.path, "_current.json")
+
+    def _manifest(self) -> dict:
+        m = {"version": None, "epoch": None, "partitions": {}}
+        if os.path.exists(self._pointer):
+            with open(self._pointer) as f:
+                m.update(json.load(f))
+        return m
+
+    def _write_manifest(self, m: dict) -> None:
+        tmp = self._pointer + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(m, f)
+        os.replace(tmp, self._pointer)
+
+    def _scopes(self, m: dict) -> dict:
+        return {} if m["version"] is None else {None: m["version"]}
+
+    def _scope_dir(self, key) -> str:
+        return self.path if key is None else os.path.join(self.path, f"p={key}")
+
+    def _version_dir(self, key, version: int) -> str:
+        return os.path.join(self._scope_dir(key), f"v{version}")
+
+    def _commit(self, m: dict, scopes: dict) -> None:
+        """Flip manifest ``m`` to the scope map ``scopes``. The root
+        scope is named by ``version`` itself, so only partitions are
+        listed."""
+        self._write_manifest({
+            **m,
+            "version": (m["version"] or 0) + 1,
+            "partitions": {k: v for k, v in scopes.items() if k is not None},
+        })
+
+    def _read_scopes(self, scopes: dict) -> DataFrame:
+        paths = [self._version_dir(k, v) for k, v in scopes.items()]
+        if not paths:
+            return self.spark.createDataFrame([], self.schema_ddl)
+        return self.spark.read.parquet(*paths)
+
+    def _write_next(self, scopes: dict, key, df: DataFrame) -> int:
+        """Write ``df`` as scope ``key``'s next version; returns it."""
+        version = scopes.get(key, 0) + 1
+        df.write.mode("overwrite").parquet(self._version_dir(key, version))
+        return version
+
+    def read(self) -> DataFrame:
+        return self._read_scopes(self._scopes(self._manifest()))
+
+    def vacuum(self, keep_last: int = 2) -> int:
+        """Remove superseded version dirs (the retention job every long-
+        running stream needs, since each epoch writes new versions).
+        Keeps each scope's current version plus ``keep_last - 1``
+        predecessors; returns the number of dirs removed. Readers of the
+        current manifest are never affected."""
+        removed = 0
+        for key, current in self._scopes(self._manifest()).items():
+            d = self._scope_dir(key)
+            for entry in os.listdir(d):
+                ver = entry[1:]
+                if entry.startswith("v") and ver.isdigit() and int(ver) <= current - keep_last:
+                    shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
+                    removed += 1
+        return removed
+
+
+class ParquetMergeTarget(_ScopedVersions):
     """A versioned parquet table that accepts change batches.
 
-    With ``partition_col`` set, each batch rewrites ONLY the partitions
-    it touches (per-partition version dirs + one manifest) — the scale
-    path: batch cost is O(touched partitions), not O(table). The
-    partition column must be immutable per key (e.g. a created-date),
-    the standard CDC partitioning assumption.
+    Unpartitioned, the table is the root scope and every epoch writes
+    its next version. With ``partition_col`` set, each partition value
+    is a scope and an epoch rewrites ONLY the scopes it touches, so its
+    cost is O(touched partitions), not O(table). The partition column
+    must be immutable per key (e.g. a created-date), the standard CDC
+    partitioning assumption.
     """
 
     def __init__(
@@ -53,23 +162,18 @@ class ParquetMergeTarget:
         engine: str = ENGINE_REPLACE,
         partition_col: str | None = None,
     ) -> None:
-        self.spark = spark
-        self.path = path
-        self.pk_cols = list(pk_cols)
-        self.schema_ddl = schema_ddl
         # fail misconfiguration at sink construction, not mid-stream at
         # the first epoch apply (where it surfaced as merge_collapsed's
         # less-obvious "does not support engine")
-        from gravity_spark.operators.upsert import ENGINE_ON_DUP_UPDATE
-
         supported = {ENGINE_REPLACE, ENGINE_ON_DUP_UPDATE, ENGINE_INSERT_IGNORE}
         if engine not in supported:
             raise ValueError(
                 f"unknown merge engine {engine!r}; supported: {sorted(supported)}"
             )
+        super().__init__(spark, path, schema_ddl)
+        self.pk_cols = list(pk_cols)
         self.engine = engine
         self.partition_col = partition_col
-        os.makedirs(path, exist_ok=True)
         # restart recovery: the manifest records the LIVE schema (it may
         # have evolved past the declared one via additive widening or
         # apply_ddl), so a re-opened target agrees with the catalog
@@ -80,25 +184,13 @@ class ParquetMergeTarget:
         if m.get("pk"):
             self.pk_cols = list(m["pk"])
 
-    @property
-    def _pointer(self) -> str:
-        return os.path.join(self.path, "_current.json")
-
-    def _manifest(self) -> dict:
-        if not os.path.exists(self._pointer):
-            return {"version": None, "partitions": {}}
-        with open(self._pointer) as f:
-            m = json.load(f)
-        m.setdefault("partitions", {})
-        return m
-
     def _write_manifest(self, m: dict) -> None:
-        m["schema"] = self.schema_ddl
-        m["pk"] = self.pk_cols
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(m, f)
-        os.replace(tmp, self._pointer)
+        super()._write_manifest({**m, "schema": self.schema_ddl, "pk": self.pk_cols})
+
+    def _scopes(self, m: dict) -> dict:
+        if self.partition_col is None:
+            return super()._scopes(m)
+        return dict(m["partitions"])
 
     def _current_version(self) -> int | None:
         return self._manifest()["version"]
@@ -106,25 +198,9 @@ class ParquetMergeTarget:
     def partition_version(self, value) -> int | None:
         return self._manifest()["partitions"].get(str(value))
 
-    def read(self) -> DataFrame:
-        m = self._manifest()
-        if self.partition_col is not None:
-            paths = [
-                os.path.join(self.path, f"p={val}", f"v{ver}")
-                for val, ver in m["partitions"].items()
-            ]
-            if not paths:
-                return self.spark.createDataFrame([], self.schema_ddl)
-            return self.spark.read.parquet(*paths)
-        if m["version"] is None:
-            return self.spark.createDataFrame([], self.schema_ddl)
-        return self.spark.read.parquet(os.path.join(self.path, f"v{m['version']}"))
-
     def read_partition(self, value) -> DataFrame:
         ver = self.partition_version(value)
-        if ver is None:
-            return self.spark.createDataFrame([], self.schema_ddl)
-        return self.spark.read.parquet(os.path.join(self.path, f"p={value}", f"v{ver}"))
+        return self._read_scopes({} if ver is None else {str(value): ver})
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel: read a historical version (unpartitioned mode).
@@ -136,7 +212,7 @@ class ParquetMergeTarget:
         never-written versions."""
         if self.partition_col is not None:
             raise ValueError("read_version applies to unpartitioned targets")
-        out = os.path.join(self.path, f"v{version}")
+        out = self._version_dir(None, version)
         if not os.path.isdir(out):
             raise FileNotFoundError(f"version {version} not present (vacuumed?)")
         return self.spark.read.parquet(out)
@@ -153,8 +229,6 @@ class ParquetMergeTarget:
         Scale shape: one co-keyed join of two versions — at warehouse
         scale both sides share the merge sink's PK layout, and the diff
         never materializes unchanged rows past the join filter."""
-        from pyspark.sql import functions as F
-
         a = self.read_version(v_from)
         b = self.read_version(v_to)
         non_pk = [c for c in a.columns if c not in self.pk_cols]
@@ -191,14 +265,11 @@ class ParquetMergeTarget:
         """Idempotent batch apply (safe for foreachBatch redelivery):
         merging an already-applied batch yields the same state.
 
-        Partitioned mode merges and rewrites only the partitions present
-        in the batch; the manifest flips once at the end, so readers see
-        either the whole old epoch or the whole new one.
+        The epoch writes the next version of every scope it touches and
+        flips the manifest once at the end, so readers see either the
+        whole old epoch or the whole new one.
         """
         changes = self._evolve_schema(changes)
-        if self.partition_col is not None:
-            self._apply_partitioned(changes, epoch_id)
-            return
         # Persist the POST-COLLAPSE frame, not the raw batch: the epoch's
         # cached footprint is O(distinct keys) instead of O(batch rows)
         # and the collapse shuffle runs once (persisting the raw batch
@@ -207,29 +278,166 @@ class ParquetMergeTarget:
         # cache leaks across streaming epochs. The insert-ignore engine
         # reads the RAW batch three ways (delete marks, first-after-
         # delete collapse, deleted keys), so it keeps the batch persist.
-        target_df = self._read_evolved()
         if self.engine == ENGINE_INSERT_IGNORE:
-            cached = changes.persist()
-            merged = merge_changes(target_df, cached, self.pk_cols, self.engine)
+            cached, merge = changes.persist(), merge_changes
         else:
-            cached = collapse_changes(
-                target_df.columns, changes, self.pk_cols
-            ).persist()
-            merged = merge_collapsed(target_df, cached, self.pk_cols, self.engine)
+            cols = [f.name for f in StructType.fromDDL(self.schema_ddl).fields]
+            cached = collapse_changes(cols, changes, self.pk_cols).persist()
+            merge = merge_collapsed
         try:
             m = self._manifest()
-            next_v = (m["version"] or 0) + 1
-            out = os.path.join(self.path, f"v{next_v}")
-            # r10 (guide §6): REBALANCE before the version write — the
-            # merge join otherwise emits one near-empty file per task
-            # (measured 32 × ~1 KB per version at sf0.1), and every
-            # later epoch re-reads all those footers. AQE sizes the
-            # output: small states coalesce to one file, large ones
-            # split at the advisory partition size.
-            merged.hint("rebalance").write.mode("overwrite").parquet(out)
-            self._write_manifest({"version": next_v, "epoch": epoch_id, "partitions": {}})
+            scopes = self._scopes(m)
+
+            def merged(keys: Sequence) -> DataFrame:
+                current = {k: scopes[k] for k in keys if k in scopes}
+                return merge(
+                    self._widen(self._read_scopes(current)),
+                    cached,
+                    self.pk_cols,
+                    self.engine,
+                )
+
+            written = self._write_touched(scopes, cached, merged, epoch_id)
+            if written is not None:
+                self._commit({**m, "epoch": epoch_id}, written)
         finally:
             cached.unpersist()
+
+    def _write_touched(
+        self,
+        scopes: dict,
+        cached: DataFrame,
+        merged: Callable[[Sequence], DataFrame],
+        epoch_id: int | None,
+    ) -> dict | None:
+        """Write the next version of every scope the epoch touches;
+        returns the new scope map, or None when it touches none.
+        ``merged(keys)`` is the batch merged into those scopes' state.
+
+        The root scope is always the one touched scope, so an
+        unpartitioned target runs no discovery job.
+
+        REBALANCE before the version write — the merge
+        join otherwise emits one near-empty file per task (measured
+        32 × ~1 KB per version at sf0.1), and every later epoch re-reads
+        all those footers. AQE sizes the output: small states coalesce
+        to one file, large ones split at the advisory partition size.
+        """
+        if self.partition_col is None:
+            return {None: self._write_next(scopes, None, merged([None]).hint("rebalance"))}
+        return self._write_partitions(scopes, cached, merged, epoch_id)
+
+    def _write_partitions(
+        self,
+        scopes: dict,
+        cached: DataFrame,
+        merged: Callable[[Sequence], DataFrame],
+        epoch_id: int | None,
+    ) -> dict | None:
+        """ONE merge job per epoch, not one per touched partition: the
+        current state of every touched partition is read as one
+        DataFrame, merged with the whole batch in one PK-keyed merge
+        (safe because the partition column is immutable per key, so
+        cross-partition PK collisions cannot exist), and written once
+        with partitionBy into a staging dir whose per-partition subdirs
+        are then renamed into their versioned slots. Sequential
+        per-partition Spark jobs made epoch cost O(partitions × job
+        overhead); this shape keeps it O(batch) with one shuffle."""
+        pcol = self.partition_col
+        # Touched-partition discovery reads the COLLAPSED frame: the
+        # touched set is identical to the raw batch's (the partition
+        # column is immutable per key, and deletes survive the collapse
+        # carrying their partition value), and the discovery job doubles
+        # as the cache materialization, so the raw batch is read exactly
+        # ONCE per epoch. (A raw-batch discovery variant saves nothing —
+        # same job count, the collapse just moves into the broadcast
+        # build — and costs a second source scan per epoch. Small-scale
+        # band pinned in BASELINE.md §13.)
+        # Collect BOTH the value and Spark's own string rendering of it:
+        # the staging dir's __p=<fragment> children are written with
+        # Spark's partition-path encoding (URL-escaped specials, booleans
+        # as 'true'/'false', NULL as __HIVE_DEFAULT_PARTITION__), which
+        # differs from Python str() for bools/None/timestamps — matching
+        # on str(val) silently treated live partitions as fully deleted.
+        touched = [
+            (r["_v"], _NULL_PARTITION if r["_s"] is None else r["_s"])
+            for r in cached.select(
+                F.col(pcol).alias("_v"), F.col(pcol).cast("string").alias("_s")
+            )
+            .distinct()
+            .collect()
+        ]
+        if not touched:
+            return None
+        if any(s == "" for _, s in touched):
+            # Spark's partition-path encoding writes '' and NULL to the
+            # SAME __HIVE_DEFAULT_PARTITION__ child, so the two cannot be
+            # staged (or renamed) distinctly — fail the epoch loudly at
+            # apply time instead of misclassifying the live '' partition
+            # as a full delete
+            raise ValueError(
+                f"empty-string value in partition column {pcol!r}: "
+                "indistinguishable from NULL under Spark's partition-"
+                "path encoding; map '' to a sentinel upstream"
+            )
+        out = merged([str(v) for v, _ in touched])
+        # __p duplicates the partition value for the directory layout
+        # only — the data files keep pcol as a normal column, so
+        # per-version dirs stay readable standalone
+        staging = os.path.join(self.path, f"_stage_e{epoch_id}")
+        shutil.rmtree(staging, ignore_errors=True)
+        # REBALANCE on the partition column: without it every shuffle
+        # task emits a sliver into every touched partition dir. AQE
+        # coalesces small partitions into shared tasks and SPLITS a
+        # skewed partition value across tasks, so no single writer owns
+        # a 100 TB partition.
+        out.withColumn("__p", F.col(pcol)).hint("rebalance", "__p").write.mode(
+            "overwrite"
+        ).partitionBy("__p").parquet(staging)
+        # enumerate what Spark ACTUALLY wrote and decode the partition-
+        # path fragments (percent-escaping is Spark's own; unquote
+        # inverts it exactly since '%' itself is escaped)
+        present = {
+            unquote(child[len("__p=") :]): child
+            for child in os.listdir(staging)
+            if child.startswith("__p=")
+        }
+        scopes = dict(scopes)
+        missing = [v for v, s in touched if s not in present]
+        if missing:
+            # a partition absent from staging means every row was
+            # deleted — VERIFY that against the merged frame before
+            # dropping it from the manifest; a nonzero count here would
+            # be silent data loss (e.g. an encoding form this decoder
+            # doesn't cover)
+            counts = {
+                r["_v"]: r["_c"]
+                for r in out.groupBy(F.col(pcol).alias("_v"))
+                .agg(F.count(F.lit(1)).alias("_c"))
+                .collect()
+            }
+            for val in missing:
+                if counts.get(val, 0) > 0:
+                    raise RuntimeError(
+                        f"partition {val!r} has {counts[val]} merged "
+                        "rows but no staged output dir — refusing to "
+                        "drop it from the manifest"
+                    )
+                scopes.pop(str(val), None)
+        for val, s in touched:
+            if s not in present:
+                continue  # verified full delete above
+            key = str(val)
+            version = scopes.get(key, 0) + 1
+            dst = self._version_dir(key, version)
+            # a dir no manifest names: left by a crashed epoch, or by a
+            # since-deleted partition of the same value
+            shutil.rmtree(dst, ignore_errors=True)
+            os.makedirs(self._scope_dir(key), exist_ok=True)
+            os.replace(os.path.join(staging, present[s]), dst)
+            scopes[key] = version
+        shutil.rmtree(staging, ignore_errors=True)
+        return scopes
 
     def _evolve_schema(self, changes: DataFrame) -> DataFrame:
         """Additive schema evolution (the supported subset of mid-stream
@@ -238,44 +446,34 @@ class ParquetMergeTarget:
         (drops/renames/type changes) requires an explicit migration —
         same restriction the reference's barrier flow effectively has.
         """
-        from pyspark.sql.types import StructType
-
         declared = StructType.fromDDL(self.schema_ddl)
         declared_names = {f.name for f in declared.fields}
-        batch_fields = [
-            f for f in changes.schema.fields if f.name not in ("op", "seq")
+        new_fields = [
+            f
+            for f in changes.schema.fields
+            if f.name not in ("op", "seq") and f.name not in declared_names
         ]
-        new_fields = [f for f in batch_fields if f.name not in declared_names]
         if new_fields:
             self.schema_ddl = ", ".join(
-                [f"{f.name} {f.dataType.simpleString()}" for f in declared.fields]
-                + [f"{f.name} {f.dataType.simpleString()}" for f in new_fields]
+                f"{f.name} {f.dataType.simpleString()}"
+                for f in [*declared.fields, *new_fields]
             )
         # align the batch to the (possibly wider) declared schema: old-
-        # schema changes arriving after evolution get NULL-filled too.
-        # A declared column may itself be named op/seq (e.g. an SCD2
-        # version table keyed on (user_id, seq)) — select each column
-        # once, or the duplicate attribute breaks downstream resolution
-        declared = StructType.fromDDL(self.schema_ddl)
-        out = changes
-        for f in declared.fields:
-            if f.name not in out.columns:
-                out = out.withColumn(f.name, F.lit(None).cast(f.dataType))
-        names = [f.name for f in declared.fields]
-        names += [c for c in ("op", "seq") if c not in names]
-        return out.select(*names)
+        # schema changes arriving after evolution get NULL-filled too
+        return self._widen(changes, ("op", "seq"))
 
-    def _read_evolved(self) -> DataFrame:
-        """Current state widened to the declared schema (columns added
-        by evolution read as NULL on pre-evolution rows)."""
-        from pyspark.sql.types import StructType
-
-        df = self.read()
+    def _widen(self, df: DataFrame, extra: Sequence[str] = ()) -> DataFrame:
+        """``df`` projected to the declared schema, then ``extra``;
+        declared columns it lacks (added by evolution) read as NULL. A
+        declared column may itself be named op/seq (e.g. an SCD2 version
+        table keyed on (user_id, seq)) — select each column once, or the
+        duplicate attribute breaks downstream resolution."""
         declared = StructType.fromDDL(self.schema_ddl)
         for f in declared.fields:
             if f.name not in df.columns:
                 df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        return df.select(*[f.name for f in declared.fields])
+        names = [f.name for f in declared.fields]
+        return df.select(*names, *[c for c in extra if c not in names])
 
     def apply_ddl(self, actions: Sequence[tuple]) -> bool:
         """Physically apply structured DDL actions (from
@@ -284,20 +482,19 @@ class ParquetMergeTarget:
         ALTER to the output by AST rewrite (pkg/outputs/mysql/
         mysql.go:222-440, rename/modify covered by integration_test/
         mysql_mysql_test.go DDL cases); here a rename/drop/modify
-        rewrites the current state into a NEW version dir and flips the
+        rewrites every scope into its NEW version dir and flips the
         manifest, so history versions stay readable under their
         original schema and readers never see a half-rewritten table.
 
         add-col stays lazy (schema widens, old rows read NULL — no data
         rewrite, same as additive evolution). truncate writes an empty
-        next version. Returns True if a new version was written.
+        next version of every scope. Returns True if new versions were
+        written.
 
-        Scale shape: one column-projection rewrite of the touched
-        partitions — the same cost class as a Delta/Iceberg physical
-        column drop; nothing funnels through the driver.
+        Scale shape: one column-projection rewrite per scope — the same
+        cost class as a Delta/Iceberg physical column drop; nothing
+        funnels through the driver.
         """
-        from pyspark.sql.types import StructType
-
         from gravity_spark.core.catalog import mysql_to_spark_type
 
         if not actions:
@@ -346,388 +543,87 @@ class ParquetMergeTarget:
                 truncate = True
 
         self.schema_ddl = ", ".join(f"{n} {t.simpleString()}" for n, _, t in fields)
-        if truncate:
-            empty = self.spark.createDataFrame([], self.schema_ddl)
-            if self.partition_col is None:
-                m = self._manifest()
-                next_v = (m["version"] or 0) + 1
-                empty.write.mode("overwrite").parquet(
-                    os.path.join(self.path, f"v{next_v}")
-                )
-                self._write_manifest(
-                    {"version": next_v, "epoch": m.get("epoch"), "partitions": {}}
-                )
-            else:
-                m = self._manifest()
-                m["partitions"] = {}
-                m["version"] = (m["version"] or 0) + 1
-                self._write_manifest(m)
-            return True
-        if not rewrite:
-            # additive-only: persist the widened schema so a restarted
+        m = self._manifest()
+        scopes = self._scopes(m)
+        if not (rewrite or truncate) or not scopes:
+            # schema-only: persist the widened schema so a restarted
             # target agrees with the catalog without replaying DDL
-            self._write_manifest(self._manifest())
+            self._write_manifest(m)
             return False
 
         def project(df: DataFrame) -> DataFrame:
-            cols = []
+            if truncate:
+                return self.spark.createDataFrame([], self.schema_ddl)
             present = set(df.columns)
-            for name, src, t in fields:
-                if src is not None and src in present:
-                    cols.append(F.col(src).cast(t).alias(name))
-                else:
-                    cols.append(F.lit(None).cast(t).alias(name))
-            return df.select(*cols)
+            return df.select(*[
+                F.col(src).cast(t).alias(name)
+                if src is not None and src in present
+                else F.lit(None).cast(t).alias(name)
+                for name, src, t in fields
+            ])
 
-        m = self._manifest()
-        if self.partition_col is None:
-            if m["version"] is None:
-                self._write_manifest(m)  # schema-only: nothing to rewrite
-                return False
-            current = self.spark.read.parquet(
-                os.path.join(self.path, f"v{m['version']}")
-            )
-            next_v = m["version"] + 1
-            project(current).write.mode("overwrite").parquet(
-                os.path.join(self.path, f"v{next_v}")
-            )
-            self._write_manifest(
-                {"version": next_v, "epoch": m.get("epoch"), "partitions": {}}
-            )
-            return True
-        for val, ver in list(m["partitions"].items()):
-            src_df = self.spark.read.parquet(
-                os.path.join(self.path, f"p={val}", f"v{ver}")
-            )
-            project(src_df).write.mode("overwrite").parquet(
-                os.path.join(self.path, f"p={val}", f"v{ver + 1}")
-            )
-            m["partitions"][val] = ver + 1
-        m["version"] = (m["version"] or 0) + 1
-        self._write_manifest(m)
-        return bool(m["partitions"])
-
-    def _apply_partitioned(self, changes: DataFrame, epoch_id: int | None) -> None:
-        """ONE merge job per epoch, not one per touched partition: the
-        current state of every touched partition is read as one
-        DataFrame, merged with the whole batch in one PK-keyed merge
-        (safe because the partition column is immutable per key, so
-        cross-partition PK collisions cannot exist), and written once
-        with partitionBy into a staging dir whose per-partition subdirs
-        are then renamed into their versioned slots. Sequential
-        per-partition Spark jobs made epoch cost O(partitions × job
-        overhead); this shape keeps it O(batch) with one shuffle."""
-        import shutil
-
-        from pyspark.sql.types import StructType
-
-        pcol = self.partition_col
-        # Collapse-first persist (same rationale as the unpartitioned
-        # path): the epoch caches O(distinct keys), not O(batch rows).
-        # Touched-partition discovery reads the COLLAPSED frame: the
-        # touched set is identical to the raw batch's (the partition
-        # column is immutable per key — this mode's standing contract —
-        # and deletes survive the collapse carrying their partition
-        # value), and the discovery job doubles as the cache
-        # materialization, so the raw batch is read exactly ONCE per
-        # epoch. (A raw-batch discovery variant was tried for round 8:
-        # it saves nothing — same job count, the collapse just moves
-        # into the broadcast build — and costs a second source scan per
-        # epoch, which at streaming scale means re-reading the batch's
-        # source files. The per-epoch fixed cost of collapse-first is
-        # the measured price of the 3x win at 200x batch scale;
-        # honest small-scale band pinned in BASELINE.md §13.)
-        declared0 = StructType.fromDDL(self.schema_ddl)
-        if self.engine == ENGINE_INSERT_IGNORE:
-            cached = changes.persist()
-        else:
-            cached = collapse_changes(
-                [f_.name for f_ in declared0.fields], changes, self.pk_cols
-            ).persist()
-        discovery_src = cached
-        try:
-            # collect BOTH the value and Spark's own string rendering of
-            # it: the staging dir's __p=<fragment> children are written
-            # with Spark's partition-path encoding (URL-escaped specials,
-            # booleans as 'true'/'false', NULL as
-            # __HIVE_DEFAULT_PARTITION__), which differs from Python
-            # str() for bools/None/timestamps — matching on str(val)
-            # silently treated live partitions as fully-deleted
-            touched_rows = (
-                discovery_src.select(
-                    F.col(pcol).alias("_v"), F.col(pcol).cast("string").alias("_s")
-                )
-                .distinct()
-                .collect()
-            )
-            touched = [(r["_v"], r["_s"]) for r in touched_rows]
-            if not touched:
-                return
-            if any(s == "" for _, s in touched):
-                # Spark's partition-path encoding writes '' and NULL to
-                # the SAME __HIVE_DEFAULT_PARTITION__ child, so the two
-                # cannot be staged (or renamed) distinctly — fail the
-                # epoch loudly at apply time instead of misclassifying
-                # the live '' partition as a full delete
-                raise ValueError(
-                    f"empty-string value in partition column {pcol!r}: "
-                    "indistinguishable from NULL under Spark's partition-"
-                    "path encoding; map '' to a sentinel upstream"
-                )
-            from pyspark.sql.types import StructType
-
-            declared = StructType.fromDDL(self.schema_ddl)
-            m = self._manifest()
-            paths = [
-                os.path.join(self.path, f"p={val}", f"v{m['partitions'][str(val)]}")
-                for val, _ in touched
-                if str(val) in m["partitions"]
-            ]
-            current = (
-                self.spark.read.parquet(*paths)
-                if paths
-                else self.spark.createDataFrame([], self.schema_ddl)
-            )
-            for f_ in declared.fields:
-                if f_.name not in current.columns:
-                    current = current.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-            current = current.select(*[f_.name for f_ in declared.fields])
-            if self.engine == ENGINE_INSERT_IGNORE:
-                merged = merge_changes(current, cached, self.pk_cols, self.engine)
-            else:
-                merged = merge_collapsed(current, cached, self.pk_cols, self.engine)
-            # __p duplicates the partition value for the directory layout
-            # only — the data files keep pcol as a normal column, so
-            # per-version dirs stay readable standalone
-            staging = os.path.join(self.path, f"_stage_e{epoch_id}")
-            shutil.rmtree(staging, ignore_errors=True)
-            # r10 (guide §6): REBALANCE on the partition column before
-            # the staged partitionBy write — without it every shuffle
-            # task emits a sliver into every touched partition dir
-            # (measured 32 files × ~1 KB per partition per version at
-            # sf0.1; the next epoch's current-state read then pays 256
-            # footers). Rebalance is the scale-safe form: AQE coalesces
-            # small partitions into shared tasks and SPLITS a skewed
-            # partition value across tasks, so no single writer owns a
-            # 100 TB partition.
-            merged.withColumn("__p", F.col(pcol)).hint("rebalance", "__p").write.mode(
-                "overwrite"
-            ).partitionBy("__p").parquet(staging)
-            # enumerate what Spark ACTUALLY wrote and decode the
-            # partition-path fragments (percent-escaping is Spark's own;
-            # unquote inverts it exactly since '%' itself is escaped)
-            from urllib.parse import unquote
-
-            present = {
-                unquote(child[len("__p=") :]): child
-                for child in os.listdir(staging)
-                if child.startswith("__p=")
-            }
-            missing = [
-                (val, s)
-                for val, s in touched
-                if (s if s is not None else "__HIVE_DEFAULT_PARTITION__")
-                not in present
-            ]
-            if missing:
-                # a partition absent from staging means every row was
-                # deleted — VERIFY that against the merged frame before
-                # dropping it from the manifest; a nonzero count here
-                # would be silent data loss (e.g. an encoding form this
-                # decoder doesn't cover)
-                counts = {
-                    r["_v"]: r["_c"]
-                    for r in merged.groupBy(F.col(pcol).alias("_v"))
-                    .agg(F.count(F.lit(1)).alias("_c"))
-                    .collect()
-                }
-                for val, _ in missing:
-                    if counts.get(val, 0) > 0:
-                        raise RuntimeError(
-                            f"partition {val!r} has {counts[val]} merged "
-                            "rows but no staged output dir — refusing to "
-                            "drop it from the manifest"
-                        )
-                    m["partitions"].pop(str(val), None)
-            for val, s in touched:
-                child = present.get(
-                    s if s is not None else "__HIVE_DEFAULT_PARTITION__"
-                )
-                if child is None:
-                    continue  # verified full delete above
-                src = os.path.join(staging, child)
-                next_v = (m["partitions"].get(str(val)) or 0) + 1
-                dst_dir = os.path.join(self.path, f"p={val}")
-                os.makedirs(dst_dir, exist_ok=True)
-                os.replace(src, os.path.join(dst_dir, f"v{next_v}"))
-                m["partitions"][str(val)] = next_v
-            shutil.rmtree(staging, ignore_errors=True)
-            m["version"] = (m["version"] or 0) + 1
-            m["epoch"] = epoch_id
-            self._write_manifest(m)
-        finally:
-            cached.unpersist()
-
-    def foreach_batch(self):
-        """Adapter for ``writeStream.foreachBatch``."""
-        def fn(df: DataFrame, epoch_id: int) -> None:
-            self.apply_batch(df, epoch_id)
-        return fn
+        self._commit(m, {
+            k: self._write_next(scopes, k, project(self._read_scopes({k: v})))
+            for k, v in scopes.items()
+        })
+        return True
 
     def compact(self, target_bytes: int = 128 * 1024 * 1024) -> dict:
         """Small-file compaction (the OPTIMIZE bin-packing job): rewrite
-        the current version's data into right-sized files as a NEW
-        version and flip the pointer — data is byte-identical, readers
+        each scope's current data into right-sized files as its NEW
+        version and flip the manifest — data is byte-identical, readers
         are never disturbed, and a crashed compaction leaves the old
         version current (same atomicity as apply_batch). Streaming CDC
         merges naturally produce file counts tied to shuffle
         parallelism, not data volume; at 100 TB unmanaged small files
         dominate scan open/seek cost, so compaction cadence is the knob
         that keeps scan cost proportional to bytes. Returns per-scope
-        (files_before, files_after)."""
-        import math
-
-        def dir_stats(d: str) -> tuple[int, int]:
-            files = [
-                os.path.join(d, e)
-                for e in os.listdir(d)
-                if e.endswith(".parquet") and not e.startswith("_")
-            ]
-            return len(files), sum(os.path.getsize(f) for f in files)
-
-        def compact_dir(read_df: DataFrame, dirpath: str, current: int) -> dict:
-            src = os.path.join(dirpath, f"v{current}")
-            n_before, nbytes = dir_stats(src)
-            n_target = max(1, math.ceil(nbytes / target_bytes))
-            if n_target >= n_before:
-                return {"files_before": n_before, "files_after": n_before}
-            out = os.path.join(dirpath, f"v{current + 1}")
-            read_df.repartition(n_target).write.mode("overwrite").parquet(out)
-            return {"files_before": n_before, "files_after": dir_stats(out)[0]}
-
+        (files_before, files_after), keyed by partition value or
+        ``"<table>"`` for the root scope."""
         m = self._manifest()
+        scopes = self._scopes(m)
+        compacted = dict(scopes)
         result: dict = {}
-        if self.partition_col is None:
-            if m["version"] is None:
-                return {}
-            stats = compact_dir(self.read(), self.path, m["version"])
-            if stats["files_after"] < stats["files_before"]:
-                m["version"] += 1
-                self._write_manifest(m)
-            result["<table>"] = stats
-            return result
-        flipped = False
-        for val, ver in list(m["partitions"].items()):
-            stats = compact_dir(
-                self.read_partition(val), os.path.join(self.path, f"p={val}"), ver
-            )
-            if stats["files_after"] < stats["files_before"]:
-                m["partitions"][val] = ver + 1
-                flipped = True
-            result[str(val)] = stats
-        if flipped:
-            m["version"] = (m["version"] or 0) + 1
-            self._write_manifest(m)
+        for key, ver in scopes.items():
+            files = _data_files(self._version_dir(key, ver))
+            n_target = max(1, math.ceil(sum(map(os.path.getsize, files)) / target_bytes))
+            n_after = len(files)
+            if n_target < len(files):
+                df = self._read_scopes({key: ver}).repartition(n_target)
+                compacted[key] = self._write_next(scopes, key, df)
+                n_after = len(_data_files(self._version_dir(key, compacted[key])))
+            result["<table>" if key is None else key] = {
+                "files_before": len(files),
+                "files_after": n_after,
+            }
+        if compacted != scopes:
+            self._commit(m, compacted)
         return result
 
-    def vacuum(self, keep_last: int = 2) -> int:
-        """Remove superseded version directories (the sink's compaction/
-        retention job). Keeps the current version plus ``keep_last - 1``
-        predecessors per table/partition; returns directories removed.
-        Readers of the current manifest are never affected."""
-        import shutil
 
-        removed = 0
-        m = self._manifest()
-
-        def clean(dirpath: str, current: int | None) -> int:
-            n = 0
-            if current is None or not os.path.isdir(dirpath):
-                return 0
-            for entry in os.listdir(dirpath):
-                if entry.startswith("v"):
-                    try:
-                        ver = int(entry[1:])
-                    except ValueError:
-                        continue
-                    if ver <= current - keep_last:
-                        shutil.rmtree(os.path.join(dirpath, entry), ignore_errors=True)
-                        n += 1
-            return n
-
-        if self.partition_col is None:
-            removed += clean(self.path, m["version"])
-        else:
-            for val, ver in m["partitions"].items():
-                removed += clean(os.path.join(self.path, f"p={val}"), ver)
-        return removed
-
-
-class AggregateRollupTarget:
+class AggregateRollupTarget(_ScopedVersions):
     """Continuous-aggregate target: per-key ADDITIVE partials merged via
     one union + re-aggregation per epoch (operators.upsert.
-    merge_aggregate). The manifest records the last applied epoch, so a
-    foreachBatch redelivery of the same epoch is a no-op — addition is
-    not idempotent, so exactly-once here is epoch-guarded rather than
-    merge-idempotent (the counterpart of the reference's position-flush
-    dedup, pkg/position_cache/cache.go:13).
+    merge_aggregate) into the root scope. The manifest records the last
+    applied epoch, so a foreachBatch redelivery of the same epoch is a
+    no-op — addition is not idempotent, so exactly-once here is epoch-
+    guarded rather than merge-idempotent (the counterpart of the
+    reference's position-flush dedup, pkg/position_cache/cache.go:13).
     """
 
     def __init__(self, spark, path: str, key_cols, agg_cols, schema_ddl: str):
-        self.spark = spark
-        self.path = path
+        super().__init__(spark, path, schema_ddl)
         self.key_cols = list(key_cols)
         self.agg_cols = list(agg_cols)
-        self.schema_ddl = schema_ddl
-        os.makedirs(path, exist_ok=True)
-
-    def _manifest(self) -> dict:
-        p = os.path.join(self.path, "_manifest.json")
-        if not os.path.exists(p):
-            return {"version": None, "epoch": None}
-        with open(p) as fh:
-            return json.load(fh)
-
-    def read(self) -> DataFrame:
-        m = self._manifest()
-        if m["version"] is None:
-            return self.spark.createDataFrame([], self.schema_ddl)
-        return self.spark.read.parquet(os.path.join(self.path, f"v{m['version']}"))
 
     def apply_batch(self, partials: DataFrame, epoch_id: int) -> None:
-        from gravity_spark.operators.upsert import merge_aggregate
-
         m = self._manifest()
         if m["epoch"] is not None and epoch_id <= m["epoch"]:
             return  # epoch already applied (redelivery after restart)
-        merged = merge_aggregate(self.read(), partials, self.key_cols, self.agg_cols)
-        next_v = (m["version"] or 0) + 1
-        # r10 (guide §6): rebalance — see ParquetMergeTarget.apply_batch
-        merged.hint("rebalance").write.mode("overwrite").parquet(
-            os.path.join(self.path, f"v{next_v}")
+        scopes = self._scopes(m)
+        merged = merge_aggregate(
+            self._read_scopes(scopes), partials, self.key_cols, self.agg_cols
         )
-        tmp = os.path.join(self.path, "_manifest.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"version": next_v, "epoch": epoch_id}, fh)
-        os.replace(tmp, os.path.join(self.path, "_manifest.json"))
-
-    def vacuum(self, keep_last: int = 2) -> int:
-        """Reclaim version dirs older than the last ``keep_last`` —
-        required for long-running streams (every epoch writes a full new
-        version). Returns the number of versions removed."""
-        import shutil
-
-        current = self._manifest()["version"]
-        if current is None:
-            return 0
-        removed = 0
-        for entry in os.listdir(self.path):
-            if entry.startswith("v"):
-                try:
-                    ver = int(entry[1:])
-                except ValueError:
-                    continue
-                if ver <= current - keep_last:
-                    shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
-                    removed += 1
-        return removed
+        # rebalance — see ParquetMergeTarget._write_touched
+        version = self._write_next(scopes, None, merged.hint("rebalance"))
+        self._commit({**m, "epoch": epoch_id}, {None: version})

@@ -124,25 +124,27 @@ def run_stream(
     and a later epoch's merge are never disturbed.
     """
     def per_batch(df: DataFrame, epoch_id: int) -> None:
-        if catalog is not None:
-            from gravity_spark.operators.ddl import parse_and_apply
+        dml = None
+        try:
+            if catalog is not None:
+                from gravity_spark.operators.ddl import parse_and_apply
 
-            ddl_rows = [
-                r
-                for r in df.filter(F.col("type") == "ddl")
-                .select("ddl_statement", "seq")
-                .orderBy("seq")
-                .collect()
-                if r["ddl_statement"]
-            ]
-            if ddl_rows:
-                # split the batch at each DDL seq: flush the DML slice
-                # that the binlog ordered BEFORE the DDL under the old
-                # schema, then apply the DDL, then continue — the
-                # foreachBatch boundary alone is NOT the barrier when
-                # the source delivers DDL mid-batch
-                dml = df.filter(F.col("type") != "ddl").persist()
-                try:
+                ddl_rows = [
+                    r
+                    for r in df.filter(F.col("type") == "ddl")
+                    .select("ddl_statement", "seq")
+                    .orderBy("seq")
+                    .collect()
+                    if r["ddl_statement"]
+                ]
+                df = df.filter(F.col("type") != "ddl")
+                if ddl_rows:
+                    # split the batch at each DDL seq: flush the DML
+                    # slice that the binlog ordered BEFORE the DDL under
+                    # the old schema, then apply the DDL, then continue
+                    # — the foreachBatch boundary alone is NOT the
+                    # barrier when the source delivers DDL mid-batch
+                    dml = df.persist()
                     lo = None
                     for r in ddl_rows:
                         cond = F.col("seq") < F.lit(r["seq"])
@@ -165,17 +167,10 @@ def run_stream(
                             target.apply_ddl(res.actions)
                         lo = r["seq"]
                     df = dml.filter(F.col("seq") >= F.lit(lo))
-                    batch = typed(df)
-                    target.apply_batch(batch, epoch_id)
-                finally:
-                    dml.unpersist()
-                if compact_every and (epoch_id + 1) % compact_every == 0:
-                    target.compact(target_bytes=compact_target_bytes)
-                    target.vacuum()
-                return
-            df = df.filter(F.col("type") != "ddl")
-        batch = typed(df)
-        target.apply_batch(batch, epoch_id)
+            target.apply_batch(typed(df), epoch_id)
+        finally:
+            if dml is not None:
+                dml.unpersist()
         if compact_every and (epoch_id + 1) % compact_every == 0:
             target.compact(target_bytes=compact_target_bytes)
             target.vacuum()

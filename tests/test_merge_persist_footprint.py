@@ -69,3 +69,38 @@ def test_insert_ignore_apply_keeps_raw_batch_persist(
     target.apply_batch(changes, epoch_id=1)
     assert persisted  # persists, raw-batch-sized is acceptable here
     assert target.read().count() == 50
+
+
+def test_unpartitioned_apply_runs_no_discovery_collect(
+    spark, tmp_path, monkeypatch
+):
+    """The root scope is always the one scope an unpartitioned epoch
+    touches, so its apply collects nothing to the driver: no touched-
+    scope discovery job rides the replication tail. The partitioned
+    apply, which does discover its touched scopes, shows the spy sees
+    a collect."""
+    calls = []
+    orig = DataFrame.collect
+
+    def spy(self, *a, **k):
+        calls.append(self)
+        return orig(self, *a, **k)
+
+    def batch(i):
+        return spark.range(1_000).selectExpr(
+            "id % 50 AS k", "id % 2 AS p", f"id + {i} AS v", "'update' AS op",
+            "id AS seq",
+        )
+
+    target = ParquetMergeTarget(spark, str(tmp_path / "u"), ["k"], "k long, v long")
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    target.apply_batch(batch(0).drop("p"), epoch_id=1)
+    target.apply_batch(batch(1).drop("p"), epoch_id=2)
+    assert calls == []
+
+    part = ParquetMergeTarget(
+        spark, str(tmp_path / "p"), ["k"], "k long, p long, v long",
+        partition_col="p",
+    )
+    part.apply_batch(batch(0), epoch_id=1)
+    assert calls

@@ -249,9 +249,8 @@ def test_compact_partitioned(spark, tmp_path):
     # apply_batch now rebalances its staged write to right-sized files,
     # so fragment each partition's current version BY HAND to build the
     # accumulated-small-files state compaction exists for
-    m = t._manifest()
-    for val, ver in m["partitions"].items():
-        src = str(tmp_path / "tcp" / f"p={val}" / f"v{ver}")
+    for val in ("d0", "d1"):
+        src = str(tmp_path / "tcp" / f"p={val}" / f"v{t.partition_version(val)}")
         frag = src + "_frag"
         with _no_coalesce(spark):
             spark.read.parquet(src).repartition(3).write.parquet(frag)
@@ -339,3 +338,19 @@ def test_changes_between_versions(spark, tmp_path):
     # symmetric sanity: reversing the versions flips inserts/deletes
     rev = {r["id"]: r["op"] for r in t.changes_between(v2, v1).collect()}
     assert rev[1] == "insert" and rev[4] == "delete" and rev[2] == "update"
+
+
+def test_partition_recreated_after_full_delete(spark, tmp_path):
+    """A fully deleted partition leaves the manifest but its version
+    dirs stay on disk until vacuumed; re-creating the same value writes
+    over the stale dir instead of failing the rename."""
+    t = ParquetMergeTarget(
+        spark, str(tmp_path / "rc"), ["id"],
+        "id long, dt string, v string", partition_col="dt",
+    )
+    t.apply_batch(_batch(spark, [(1, "d1", "a", "insert", 1)]), epoch_id=0)
+    t.apply_batch(_batch(spark, [(1, "d1", None, "delete", 2)]), epoch_id=1)
+    assert t.partition_version("d1") is None
+    t.apply_batch(_batch(spark, [(2, "d1", "b", "insert", 3)]), epoch_id=2)
+    assert t.partition_version("d1") == 1
+    assert [(r["id"], r["v"]) for r in t.read().collect()] == [(2, "b")]
