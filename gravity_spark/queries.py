@@ -32,6 +32,7 @@ from gravity_spark.core.envelope import events_to_changes
 from gravity_spark.functions import text as tx
 from gravity_spark.functions import similarity as sim
 from gravity_spark.operators.collapse import collapse_last_write_wins
+from gravity_spark.tables import parquet_schema, read_parquet
 
 
 from contextlib import contextmanager
@@ -169,7 +170,13 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
     or TIMESTAMP_NTZ (vanilla session — the driver's — truncates nanos to
     micros natively). Normalize both to a session-TZ TIMESTAMP so epoch
     math and watermarks work identically; with UTC session TZ the values
-    are bit-equal to DuckDB's reader either way (verified min/max/count)."""
+    are bit-equal to DuckDB's reader either way (verified min/max/count).
+
+    The shape is decided once, when the loader infers the file's schema
+    (gravity_spark.tables): a pinned read asks the reader for exactly the
+    inferred type, so ``ts`` arrives in the same shape as an inferring
+    read would give it, and batch tables and stream sources (which take
+    the same pinned schema) normalize identically."""
     for f in df.schema.fields:
         if f.name == "ts":
             t = f.dataType.simpleString()
@@ -181,12 +188,15 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Table ``name`` of ``sf_dir`` with its schema pinned by the loader:
+    the footers are inferred once per file version, so every later call
+    builds its DataFrame without a Spark job."""
     # the driver's own session won't carry these configs — set them here
     # so nano-timestamp parquet (events.ts) loads and epoch math matches
     # the (TZ-naive) DuckDB oracle under any session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return _normalize_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return _normalize_ts(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
 
 
 def _int_div(col, n: int):
@@ -4879,7 +4889,7 @@ def streaming_window_counts(spark, sf_dir):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # RAW parquet schema (ts as long nanos) — the stream converts after read
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    ev_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(ev_schema)
         .format("parquet")
@@ -4926,7 +4936,7 @@ def streaming_stream_join(spark, sf_dir):
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
 
     def side(event_type, prefix):
         s = (
@@ -5019,7 +5029,7 @@ def streaming_stream_outer_join(spark, sf_dir):
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
 
     def side(event_type, prefix):
         s = (
@@ -5101,7 +5111,7 @@ def streaming_cdc_pipeline(spark, sf_dir):
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")
@@ -7146,7 +7156,7 @@ def streaming_incremental_rollup(spark, sf_dir):
     try:
         src = f"{tmp}/src"
         ev.repartition(4).write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
+        schema = parquet_schema(spark, src)
         stream = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", "2")
@@ -7219,7 +7229,7 @@ def streaming_sessionize_stateful(spark, sf_dir):
     name = f"sss_{uuid.uuid4().hex[:8]}"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    ev_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(ev_schema)
         .format("parquet")
@@ -8114,7 +8124,7 @@ def streaming_dedup_watermark(spark, sf_dir):
     import uuid
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")
@@ -8441,7 +8451,7 @@ def streaming_static_join(spark, sf_dir):
     import uuid
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")
@@ -9044,7 +9054,7 @@ def streaming_topk_trending(spark, sf_dir):
     name = f"trend_{uuid.uuid4().hex[:8]}"
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    ev_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(ev_schema)
         .format("parquet")
@@ -17277,7 +17287,7 @@ def streaming_sliding_window_counts(spark, sf_dir):
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
     stream = (
         spark.readStream.schema(raw_schema)
         .format("parquet")

@@ -25,6 +25,19 @@ every commit, so its current dir is ``v{version}``), ``epoch`` is the
 last applied streaming epoch, ``partitions`` maps each partition value
 to its version, and ``schema`` / ``pk`` record the live schema so a
 re-opened target needs no DDL replay.
+
+Types follow the declared schema exactly:
+
+- writes are cast to the declared types. A batch column may only be
+  up-cast (Spark's ``Cast.canUpCast``: int to bigint, float to double,
+  widening decimals); any other type difference raises ``ValueError``
+  before a job runs or a version dir is written;
+- current-state reads (``read``, ``read_partition`` and the state every
+  merge, compaction and DDL rewrite starts from) are pinned to the
+  manifest schema, so they infer no footers and run no job until the
+  caller acts on the frame;
+- history reads (``read_version``, ``changes_between``) infer, because a
+  retained version may predate a DDL rewrite.
 """
 
 from __future__ import annotations
@@ -38,7 +51,7 @@ from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import DataType, StructType
 
 from gravity_spark.operators.upsert import (
     ENGINE_INSERT_IGNORE,
@@ -52,6 +65,16 @@ from gravity_spark.operators.upsert import (
 
 # Spark's partition-path rendering of a NULL partition value
 _NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _can_up_cast(spark: SparkSession, src: DataType, dst: DataType) -> bool:
+    """Spark's own up-cast rule, ``Cast.canUpCast`` (the one that guards
+    ``Dataset.as``): true when every ``src`` value converts to ``dst``
+    without loss of range or precision."""
+    parse = spark._jsparkSession.parseDataType
+    return spark._jvm.org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(
+        parse(src.json()), parse(dst.json())
+    )
 
 
 def _data_files(d: str) -> list[str]:
@@ -110,11 +133,15 @@ class _ScopedVersions:
             "partitions": {k: v for k, v in scopes.items() if k is not None},
         })
 
-    def _read_scopes(self, scopes: dict) -> DataFrame:
+    def _read_scopes(self, scopes: dict, schema_ddl: str | None = None) -> DataFrame:
+        """The scopes' named versions, read with ``schema_ddl`` (default:
+        the declared schema) pinned. Columns a version lacks (added by
+        evolution since it was written) read as NULL."""
+        schema = StructType.fromDDL(schema_ddl or self.schema_ddl)
         paths = [self._version_dir(k, v) for k, v in scopes.items()]
         if not paths:
-            return self.spark.createDataFrame([], self.schema_ddl)
-        return self.spark.read.parquet(*paths)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*paths)
 
     def _write_next(self, scopes: dict, key, df: DataFrame) -> int:
         """Write ``df`` as scope ``key``'s next version; returns it."""
@@ -209,7 +236,9 @@ class ParquetMergeTarget(_ScopedVersions):
         the manifest pointer, so prior versions remain readable until
         `vacuum` reclaims them — the same contract as Delta/Iceberg
         `VERSION AS OF`. Raises FileNotFoundError for vacuumed or
-        never-written versions."""
+        never-written versions. The read infers the version's own
+        schema: a version written before a DDL rewrite keeps its
+        original column names and types."""
         if self.partition_col is not None:
             raise ValueError("read_version applies to unpartitioned targets")
         out = self._version_dir(None, version)
@@ -291,7 +320,7 @@ class ParquetMergeTarget(_ScopedVersions):
             def merged(keys: Sequence) -> DataFrame:
                 current = {k: scopes[k] for k in keys if k in scopes}
                 return merge(
-                    self._widen(self._read_scopes(current)),
+                    self._read_scopes(current),
                     cached,
                     self.pk_cols,
                     self.engine,
@@ -443,8 +472,10 @@ class ParquetMergeTarget(_ScopedVersions):
         """Additive schema evolution (the supported subset of mid-stream
         DDL, SURVEY §7): columns new in the batch extend the target
         schema; existing rows read as NULL for them. Non-additive DDL
-        (drops/renames/type changes) requires an explicit migration —
-        same restriction the reference's barrier flow effectively has.
+        (drops/renames/type changes) requires an explicit migration
+        (``apply_ddl``) — same restriction the reference's barrier flow
+        effectively has; a batch column of another type is up-cast or
+        refused by ``_widen``.
         """
         declared = StructType.fromDDL(self.schema_ddl)
         declared_names = {f.name for f in declared.fields}
@@ -453,27 +484,46 @@ class ParquetMergeTarget(_ScopedVersions):
             for f in changes.schema.fields
             if f.name not in ("op", "seq") and f.name not in declared_names
         ]
+        evolved = StructType([*declared.fields, *new_fields])
+        # align the batch to the (possibly wider) declared schema: old-
+        # schema changes arriving after evolution get NULL-filled too.
+        # Widen first: a rejected batch leaves the schema as it was
+        widened = self._widen(changes, evolved, ("op", "seq"))
         if new_fields:
             self.schema_ddl = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in [*declared.fields, *new_fields]
+                f"{f.name} {f.dataType.simpleString()}" for f in evolved.fields
             )
-        # align the batch to the (possibly wider) declared schema: old-
-        # schema changes arriving after evolution get NULL-filled too
-        return self._widen(changes, ("op", "seq"))
+        return widened
 
-    def _widen(self, df: DataFrame, extra: Sequence[str] = ()) -> DataFrame:
-        """``df`` projected to the declared schema, then ``extra``;
-        declared columns it lacks (added by evolution) read as NULL. A
-        declared column may itself be named op/seq (e.g. an SCD2 version
-        table keyed on (user_id, seq)) — select each column once, or the
+    def _widen(
+        self, df: DataFrame, declared: StructType, extra: Sequence[str] = ()
+    ) -> DataFrame:
+        """``df`` as the ``declared`` schema, then ``extra``: each declared
+        column cast to its declared type, and declared columns it lacks
+        (added by evolution) as NULL. Only up-casts are applied; any other
+        type difference raises ValueError, since the version would
+        otherwise hold a type its manifest does not declare. A declared
+        column may itself be named op/seq (e.g. an SCD2 version table
+        keyed on (user_id, seq)) — select each column once, or the
         duplicate attribute breaks downstream resolution."""
-        declared = StructType.fromDDL(self.schema_ddl)
+        have = {f.name: f.dataType for f in df.schema.fields}
+        cols = []
         for f in declared.fields:
-            if f.name not in df.columns:
-                df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
+            t = have.get(f.name)
+            if t is None:
+                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+            elif t == f.dataType:
+                cols.append(F.col(f.name))
+            elif _can_up_cast(self.spark, t, f.dataType):
+                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+            else:
+                raise ValueError(
+                    f"column {f.name!r} is {t.simpleString()} in the batch but "
+                    f"declared {f.dataType.simpleString()}, and "
+                    f"{t.simpleString()} does not up-cast to it"
+                )
         names = [f.name for f in declared.fields]
-        return df.select(*names, *[c for c in extra if c not in names])
+        return df.select(*cols, *[c for c in extra if c not in names])
 
     def apply_ddl(self, actions: Sequence[tuple]) -> bool:
         """Physically apply structured DDL actions (from
@@ -499,6 +549,10 @@ class ParquetMergeTarget(_ScopedVersions):
 
         if not actions:
             return False
+        # the current versions were written under the pre-DDL schema, and
+        # are read under it: read under the new one, a renamed column
+        # would be looked up by its new name and come back all NULL
+        old_ddl = self.schema_ddl
         # (visible_name, source_name_or_None, spark_type) per column;
         # folding the actions over this list yields both the new schema
         # and the old→new projection in one pass
@@ -554,16 +608,16 @@ class ParquetMergeTarget(_ScopedVersions):
         def project(df: DataFrame) -> DataFrame:
             if truncate:
                 return self.spark.createDataFrame([], self.schema_ddl)
-            present = set(df.columns)
+            # the pre-DDL read carries every source column
             return df.select(*[
-                F.col(src).cast(t).alias(name)
-                if src is not None and src in present
-                else F.lit(None).cast(t).alias(name)
+                F.lit(None).cast(t).alias(name)
+                if src is None
+                else F.col(src).cast(t).alias(name)
                 for name, src, t in fields
             ])
 
         self._commit(m, {
-            k: self._write_next(scopes, k, project(self._read_scopes({k: v})))
+            k: self._write_next(scopes, k, project(self._read_scopes({k: v}, old_ddl)))
             for k, v in scopes.items()
         })
         return True
@@ -624,6 +678,12 @@ class AggregateRollupTarget(_ScopedVersions):
         merged = merge_aggregate(
             self._read_scopes(scopes), partials, self.key_cols, self.agg_cols
         )
+        # every version holds exactly the declared types, which the
+        # pinned read of the next epoch relies on
+        merged = merged.select(*[
+            F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in StructType.fromDDL(self.schema_ddl).fields
+        ])
         # rebalance — see ParquetMergeTarget._write_touched
         version = self._write_next(scopes, None, merged.hint("rebalance"))
         self._commit({**m, "epoch": epoch_id}, {None: version})

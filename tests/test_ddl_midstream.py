@@ -274,3 +274,34 @@ def test_ddl_for_other_table_does_not_rewrite_sink(spark, tmp_path):
     # ...but this sink's schema is untouched
     assert target.schema_ddl == "id bigint, v string"
     assert set(target.read().columns) == {"id", "v"}
+
+
+def test_apply_ddl_rewrite_reads_pre_ddl_schema(spark, tmp_path):
+    """A rewrite reads the current version under the schema it was
+    written with. Read under the post-DDL schema, a renamed column is
+    looked up by its new name in the old files and every value comes
+    back NULL. History keeps the original column names and types."""
+    target = ParquetMergeTarget(
+        spark, str(tmp_path / "t"), ["id"], "id bigint, v string, n int"
+    )
+    target.apply_batch(spark.createDataFrame(
+        [(1, "a", 10, "insert", 1), (2, "b", 2**31 - 1, "insert", 2)],
+        "id long, v string, n int, op string, seq long",
+    ), 0)
+    v_before = target._current_version()
+
+    assert target.apply_ddl([("rename-col", "v", "name", "varchar(10)")])
+    df = target.read()
+    assert df.dtypes == [("id", "bigint"), ("name", "string"), ("n", "int")]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a", 10), (2, "b", 2**31 - 1)]
+
+    assert target.apply_ddl([("modify-col", "n", "bigint")])
+    df = target.read()
+    assert df.dtypes == [("id", "bigint"), ("name", "string"), ("n", "bigint")]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "a", 10), (2, "b", 2**31 - 1)]
+    # the rewritten files hold the new type, not only the pinned read
+    assert target.read_version(target._current_version()).dtypes == df.dtypes
+
+    old = target.read_version(v_before)
+    assert old.dtypes == [("id", "bigint"), ("v", "string"), ("n", "int")]
+    assert sorted(tuple(r) for r in old.collect()) == [(1, "a", 10), (2, "b", 2**31 - 1)]

@@ -354,3 +354,90 @@ def test_partition_recreated_after_full_delete(spark, tmp_path):
     t.apply_batch(_batch(spark, [(2, "d1", "b", "insert", 3)]), epoch_id=2)
     assert t.partition_version("d1") == 1
     assert [(r["id"], r["v"]) for r in t.read().collect()] == [(2, "b")]
+
+
+def _listing(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root) for f in files
+    )
+
+
+def test_narrowing_batch_rejected_before_any_write(spark, tmp_path):
+    """A ``score double`` batch into a ``score long`` target used to
+    write its version as DOUBLE under a manifest that says long. It is
+    refused, naming the column and both types, before a version dir or
+    the manifest changes."""
+    import pytest
+
+    root = str(tmp_path / "nt")
+    t = ParquetMergeTarget(spark, root, ["id"], "id long, score long")
+    t.apply_batch(spark.createDataFrame(
+        [(1, 10, "insert", 1)], "id long, score long, op string, seq long"), 0)
+    with open(os.path.join(root, "_current.json")) as f:
+        manifest = f.read()
+    files = _listing(root)
+    drift = spark.createDataFrame(
+        [(1, 2.5, "update", 2)], "id long, score double, op string, seq long")
+    with pytest.raises(ValueError, match=r"'score'.*double.*bigint"):
+        t.apply_batch(drift, 1)
+    with open(os.path.join(root, "_current.json")) as f:
+        assert f.read() == manifest
+    assert _listing(root) == files
+    assert t.schema_ddl == "id long, score long"
+    assert [tuple(r) for r in t.read().collect()] == [(1, 10)]
+
+
+def test_rejected_batch_does_not_evolve_schema(spark, tmp_path):
+    """A batch that adds a column and narrows another is refused
+    whole: the new column does not reach the declared schema."""
+    import pytest
+
+    t = ParquetMergeTarget(spark, str(tmp_path / "ne"), ["id"], "id long, score long")
+    bad = spark.createDataFrame(
+        [(1, "x", 5, "insert", 1)], "id long, score string, extra int, op string, seq long"
+    )
+    with pytest.raises(ValueError):
+        t.apply_batch(bad, 0)
+    assert t.schema_ddl == "id long, score long"
+
+
+def test_int_batch_upcast_into_bigint_target(spark, tmp_path):
+    """Up-casts are applied: an int batch lands as bigint, so every
+    version holds the declared type and the pinned read agrees with the
+    files."""
+    t = ParquetMergeTarget(spark, str(tmp_path / "up"), ["id"], "id bigint, score bigint")
+    t.apply_batch(spark.createDataFrame(
+        [(1, 7, "insert", 1), (2, 8, "insert", 2)],
+        "id int, score int, op string, seq long"), 0)
+    t.apply_batch(spark.createDataFrame(
+        [(2, 9, "update", 3)], "id int, score int, op string, seq long"), 1)
+    df = t.read()
+    assert df.dtypes == [("id", "bigint"), ("score", "bigint")]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, 7), (2, 9)]
+    # the written version itself is bigint, not only the pinned read
+    assert t.read_version(t._current_version()).dtypes == df.dtypes
+
+
+def test_aggregate_rollup_writes_declared_types(spark, tmp_path):
+    """The rollup casts its merged output to the declared schema (and
+    order): a decimal sum widens to decimal(20,2), which the next
+    epoch's pinned decimal(10,2) read would not match."""
+    from decimal import Decimal
+
+    from gravity_spark.sinks.parquet_merge import AggregateRollupTarget
+
+    t = AggregateRollupTarget(
+        spark, str(tmp_path / "aggt"), ["k"], ["amt"], "amt decimal(10,2), k string"
+    )
+    batch = spark.createDataFrame(
+        [("a", Decimal("2.50")), ("b", Decimal("1.25"))], "k string, amt decimal(10,2)"
+    )
+    t.apply_batch(batch, epoch_id=0)
+    t.apply_batch(batch, epoch_id=1)
+    declared = [("amt", "decimal(10,2)"), ("k", "string")]
+    assert spark.read.parquet(os.path.join(t.path, "v1")).dtypes == declared
+    assert spark.read.parquet(os.path.join(t.path, "v2")).dtypes == declared
+    assert {r["k"]: r["amt"] for r in t.read().collect()} == {
+        "a": Decimal("5.00"), "b": Decimal("2.50")
+    }
