@@ -45,13 +45,15 @@ def collapse_changes(
 ) -> DataFrame:
     """LWW-collapse a change batch to one row per PK, projected to the
     target's columns + ``op_col`` — the (tiny, key-cardinality) frame
-    ``merge_collapsed`` reads twice. Sinks persist THIS, not the raw
-    batch: collapsing first shrinks the epoch's cached footprint from
-    O(batch rows) to O(distinct keys) and runs the collapse shuffle
-    once instead of once per downstream read (measured on the 20M-row
-    throughput probe: persisting the raw batch cost 3.5 µs/row marginal
-    vs 0.8 µs/row with the collapsed persist — the round-6 cache-leak
-    fix had silently quadrupled the CDC apply path)."""
+    ``merge_collapsed`` reads twice. Both reads share the one collapse
+    exchange: inside a single action AQE runs that shuffle once and
+    re-reads it as a ReusedExchange, so the raw batch is scanned once
+    with no cache. A sink that reads the frame in a second action (the
+    partitioned merge's touched-scope collect) persists THIS, never the
+    raw batch: the collapsed footprint is O(distinct keys), not O(batch
+    rows) (measured on the 20M-row throughput probe: persisting the raw
+    batch cost 3.5 µs/row marginal vs 0.8 µs/row with the collapsed
+    persist)."""
     last = collapse_last_write_wins(
         changes, key_cols=list(pk_cols), order_col=order_col
     )
@@ -71,7 +73,8 @@ def merge_collapsed(
 ) -> DataFrame:
     """Merge an already-collapsed batch (one row per PK) into ``target``
     for the replace-family engines. ``last`` is read twice (keys +
-    upserts) — callers that materialize immediately persist it."""
+    upserts); when it ends in an exchange (``collapse_changes``) one
+    action runs that exchange once and reuses it for both reads."""
     pk = list(pk_cols)
     value_cols = [c for c in target.columns]
     keys = last.select(*pk)

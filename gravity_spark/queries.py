@@ -164,13 +164,18 @@ def register(name: str, oracle: str | None):
 
 
 def _normalize_ts(df: DataFrame) -> DataFrame:
-    """events.ts is TIMESTAMP(NANOS) in the testdata. Depending on the
-    session it arrives as: long nanos (spark.sql.legacy.parquet.nanosAsLong
-    set at BUILDER time — runtime conf.set is ignored by the 4.1 reader),
-    or TIMESTAMP_NTZ (vanilla session — the driver's — truncates nanos to
-    micros natively). Normalize both to a session-TZ TIMESTAMP so epoch
-    math and watermarks work identically; with UTC session TZ the values
-    are bit-equal to DuckDB's reader either way (verified min/max/count).
+    """events.ts may be stored as TIMESTAMP(NANOS) or as a tz-naive
+    TIMESTAMP(MICROS). The local sf0.001-sf0.1 testdata and perfbench's
+    generated tables are the micros shape (pyarrow.parquet.read_schema:
+    timestamp[us]), which every session reads as TIMESTAMP_NTZ; only
+    tests/test_table_loader.py exercises the nanos shape. A nanos column
+    arrives, depending on the session, as long nanos
+    (spark.sql.legacy.parquet.nanosAsLong set at BUILDER time — runtime
+    conf.set is ignored by the 4.1 reader) or as TIMESTAMP_NTZ (vanilla
+    session — the driver's — truncates nanos to micros natively).
+    Normalize every shape to a session-TZ TIMESTAMP so epoch math and
+    watermarks work identically; with UTC session TZ the values are
+    bit-equal to DuckDB's reader either way (verified min/max/count).
 
     The shape is decided once, when the loader infers the file's schema
     (gravity_spark.tables): a pinned read asks the reader for exactly the
@@ -7156,9 +7161,11 @@ def streaming_incremental_rollup(spark, sf_dir):
     try:
         src = f"{tmp}/src"
         ev.repartition(4).write.mode("overwrite").parquet(src)
-        schema = parquet_schema(spark, src)
+        # the frame just written names the files' schema: inferring the
+        # fresh dir would cost a job per call that no cache can save
+        # (file stream sources read every field as nullable anyway)
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", "2")
             .parquet(src)
         )

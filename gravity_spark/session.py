@@ -32,8 +32,11 @@ def get_spark(app_name: str = "gravity_spark", cpus: int | None = None) -> Spark
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # driver testdata stores events.ts as TIMESTAMP(NANOS); read as
-        # long and convert in the loader (Spark has no nanos timestamp)
+        # an events.ts stored as TIMESTAMP(NANOS) reads as long and is
+        # converted in the loader (Spark has no nanos timestamp); the
+        # local testdata stores it as timestamp[us], which this does not
+        # touch, so only tests/test_table_loader.py exercises the nanos
+        # branch
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")

@@ -38,6 +38,12 @@ Types follow the declared schema exactly:
   caller acts on the frame;
 - history reads (``read_version``, ``changes_between``) infer, because a
   retained version may predate a DDL rewrite.
+
+Writes follow the plan as built: a version is written with no reshuffle
+of its own, so its files are the merge plan's output partitions (the
+current version's scan splits, plus the AQE-coalesced reads of the
+epoch's shuffle), and the file size is set by the scan layout rather
+than by a REBALANCE of the whole table every epoch.
 """
 
 from __future__ import annotations
@@ -46,6 +52,7 @@ import json
 import math
 import os
 import shutil
+from functools import lru_cache
 from typing import Callable, Sequence
 from urllib.parse import unquote
 
@@ -75,6 +82,15 @@ def _can_up_cast(spark: SparkSession, src: DataType, dst: DataType) -> bool:
     return spark._jvm.org.apache.spark.sql.catalyst.expressions.Cast.canUpCast(
         parse(src.json()), parse(dst.json())
     )
+
+
+@lru_cache(maxsize=64)
+def _parse_ddl(ddl: str) -> StructType:
+    """``ddl`` parsed by Spark, once per distinct string: a parse is a
+    py4j round trip of a few ms, and the live schema is read on every
+    read and apply but changes only on evolution or DDL. The result is
+    shared; callers must not mutate it."""
+    return StructType.fromDDL(ddl)
 
 
 def _data_files(d: str) -> list[str]:
@@ -137,7 +153,7 @@ class _ScopedVersions:
         """The scopes' named versions, read with ``schema_ddl`` (default:
         the declared schema) pinned. Columns a version lacks (added by
         evolution since it was written) read as NULL."""
-        schema = StructType.fromDDL(schema_ddl or self.schema_ddl)
+        schema = _parse_ddl(schema_ddl or self.schema_ddl)
         paths = [self._version_dir(k, v) for k, v in scopes.items()]
         if not paths:
             return self.spark.createDataFrame([], schema)
@@ -299,20 +315,27 @@ class ParquetMergeTarget(_ScopedVersions):
         whole old epoch or the whole new one.
         """
         changes = self._evolve_schema(changes)
-        # Persist the POST-COLLAPSE frame, not the raw batch: the epoch's
-        # cached footprint is O(distinct keys) instead of O(batch rows)
-        # and the collapse shuffle runs once (persisting the raw batch
-        # measured 4.4x slower on the 20M-row throughput probe). Still
-        # sink-managed with unpersist in finally, so no engine-held
-        # cache leaks across streaming epochs. The insert-ignore engine
-        # reads the RAW batch three ways (delete marks, first-after-
-        # delete collapse, deleted keys), so it keeps the batch persist.
         if self.engine == ENGINE_INSERT_IGNORE:
-            cached, merge = changes.persist(), merge_changes
+            epoch, merge = changes, merge_changes
         else:
-            cols = [f.name for f in StructType.fromDDL(self.schema_ddl).fields]
-            cached = collapse_changes(cols, changes, self.pk_cols).persist()
+            cols = [f.name for f in _parse_ddl(self.schema_ddl).fields]
+            epoch = collapse_changes(cols, changes, self.pk_cols)
             merge = merge_collapsed
+        # Persist only where a second action re-reads the epoch frame.
+        # Unpartitioned replace/on-dup is ONE action: the anti-join's keys
+        # and the union's upserts read the same collapse exchange, which
+        # AQE runs once and re-reads as a ReusedExchange, so the raw batch
+        # is scanned once with no cache at all. The partitioned path's
+        # touched-scope collect precedes its write, so it persists the
+        # COLLAPSED frame (O(distinct keys), never the O(batch rows) raw
+        # batch: that measured 4.4x slower on the 20M-row throughput
+        # probe). The insert-ignore engine reads the RAW batch three ways
+        # (delete marks, first-after-delete collapse, deleted keys), so it
+        # persists the batch. Either cache is unpersisted in finally, so
+        # none leaks across streaming epochs.
+        cached = self.engine == ENGINE_INSERT_IGNORE or self.partition_col is not None
+        if cached:
+            epoch = epoch.persist()
         try:
             m = self._manifest()
             scopes = self._scopes(m)
@@ -321,21 +344,22 @@ class ParquetMergeTarget(_ScopedVersions):
                 current = {k: scopes[k] for k in keys if k in scopes}
                 return merge(
                     self._read_scopes(current),
-                    cached,
+                    epoch,
                     self.pk_cols,
                     self.engine,
                 )
 
-            written = self._write_touched(scopes, cached, merged, epoch_id)
+            written = self._write_touched(scopes, epoch, merged, epoch_id)
             if written is not None:
                 self._commit({**m, "epoch": epoch_id}, written)
         finally:
-            cached.unpersist()
+            if cached:
+                epoch.unpersist()
 
     def _write_touched(
         self,
         scopes: dict,
-        cached: DataFrame,
+        epoch: DataFrame,
         merged: Callable[[Sequence], DataFrame],
         epoch_id: int | None,
     ) -> dict | None:
@@ -344,22 +368,24 @@ class ParquetMergeTarget(_ScopedVersions):
         ``merged(keys)`` is the batch merged into those scopes' state.
 
         The root scope is always the one touched scope, so an
-        unpartitioned target runs no discovery job.
-
-        REBALANCE before the version write — the merge
-        join otherwise emits one near-empty file per task (measured
-        32 × ~1 KB per version at sf0.1), and every later epoch re-reads
-        all those footers. AQE sizes the output: small states coalesce
-        to one file, large ones split at the advisory partition size.
+        unpartitioned target runs no discovery job, and its merge is
+        written as planned (the module's write rule): the untouched rows
+        keep the current version's scan splits and the upserts arrive as
+        one AQE-coalesced shuffle read, so a version is its base's files
+        plus about one. The REBALANCE this once carried fought slivers
+        (32 x ~1 KB files per version) that came from a persisted upsert
+        side, whose partitions AQE never coalesces; without the cache
+        they are gone, and a REBALANCE would reshuffle the whole table
+        every epoch.
         """
         if self.partition_col is None:
-            return {None: self._write_next(scopes, None, merged([None]).hint("rebalance"))}
-        return self._write_partitions(scopes, cached, merged, epoch_id)
+            return {None: self._write_next(scopes, None, merged([None]))}
+        return self._write_partitions(scopes, epoch, merged, epoch_id)
 
     def _write_partitions(
         self,
         scopes: dict,
-        cached: DataFrame,
+        epoch: DataFrame,
         merged: Callable[[Sequence], DataFrame],
         epoch_id: int | None,
     ) -> dict | None:
@@ -390,7 +416,7 @@ class ParquetMergeTarget(_ScopedVersions):
         # on str(val) silently treated live partitions as fully deleted.
         touched = [
             (r["_v"], _NULL_PARTITION if r["_s"] is None else r["_s"])
-            for r in cached.select(
+            for r in epoch.select(
                 F.col(pcol).alias("_v"), F.col(pcol).cast("string").alias("_s")
             )
             .distinct()
@@ -477,7 +503,7 @@ class ParquetMergeTarget(_ScopedVersions):
         effectively has; a batch column of another type is up-cast or
         refused by ``_widen``.
         """
-        declared = StructType.fromDDL(self.schema_ddl)
+        declared = _parse_ddl(self.schema_ddl)
         declared_names = {f.name for f in declared.fields}
         new_fields = [
             f
@@ -558,7 +584,7 @@ class ParquetMergeTarget(_ScopedVersions):
         # and the old→new projection in one pass
         fields = [
             [f.name, f.name, f.dataType]
-            for f in StructType.fromDDL(self.schema_ddl).fields
+            for f in _parse_ddl(self.schema_ddl).fields
         ]
         rewrite = truncate = False
         for act in actions:
@@ -682,8 +708,9 @@ class AggregateRollupTarget(_ScopedVersions):
         # pinned read of the next epoch relies on
         merged = merged.select(*[
             F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in StructType.fromDDL(self.schema_ddl).fields
+            for f in _parse_ddl(self.schema_ddl).fields
         ])
-        # rebalance — see ParquetMergeTarget._write_touched
-        version = self._write_next(scopes, None, merged.hint("rebalance"))
+        # written as planned (see the module docstring): merge_aggregate
+        # ends in a groupBy shuffle that AQE already coalesces
+        version = self._write_next(scopes, None, merged)
         self._commit({**m, "epoch": epoch_id}, {None: version})

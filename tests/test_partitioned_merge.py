@@ -441,3 +441,47 @@ def test_aggregate_rollup_writes_declared_types(spark, tmp_path):
     assert {r["k"]: r["amt"] for r in t.read().collect()} == {
         "a": Decimal("5.00"), "b": Decimal("2.50")
     }
+
+
+def test_unpartitioned_versions_keep_scan_layout(spark, tmp_path):
+    """An unpartitioned version is written as planned, with no
+    REBALANCE: its files are the current version's scan splits plus the
+    epoch's upserts, one AQE-coalesced shuffle read. 32 shuffle
+    partitions is the setting under which an unrebalanced write over a
+    PERSISTED upsert side (whose partitions AQE never coalesces) wrote
+    32 ~1 KB slivers per version; every version must stay at base
+    splits + 1 files or fewer, and the table equal to the last-write-
+    wins model."""
+    import random
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        t = ParquetMergeTarget(spark, str(tmp_path / "lay"), ["id"], "id long, v string")
+        rng = random.Random(8)
+        model: dict = {}
+        seq = 0
+        for epoch in range(10):
+            rows = []
+            for _ in range(200):
+                seq += 1
+                k = rng.randrange(300)
+                op = "delete" if rng.random() < 0.1 else "update"
+                rows.append((k, f"e{epoch}s{seq}", op, seq))
+                if op == "delete":
+                    model.pop(k, None)
+                else:
+                    model[k] = f"e{epoch}s{seq}"
+            splits = t.read().rdd.getNumPartitions()
+            t.apply_batch(
+                spark.createDataFrame(rows, "id long, v string, op string, seq long"),
+                epoch_id=epoch,
+            )
+            vdir = os.path.join(t.path, f"v{t._current_version()}")
+            files = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+            assert len(files) <= splits + 1, (epoch, splits, len(files))
+            assert len(files) < 32, f"epoch {epoch} wrote {len(files)} sliver files"
+    finally:
+        spark.conf.set(key, before)
+    assert {r["id"]: r["v"] for r in t.read().collect()} == model

@@ -6,18 +6,26 @@ throughput ~4×) was caught only because the BASELINE §5 probe happened
 to be re-run by hand. This gate makes that class mechanically
 unshippable, with two teeth:
 
-1. STRUCTURAL (primary, deterministic): run one merge-sink apply_batch
-   over a 1M-row / 1k-key change batch with DataFrame.persist spied,
-   and assert every frame the sink persists is O(distinct keys), not
-   O(batch rows). This is the exact scale property the r7 bug broke —
-   the epoch's cached/shuffled footprint must be the collapsed frame —
-   and it is immune to host noise: the pre-fix tree fails it at ANY
-   drift, on ANY host. (r9 calibration measured why wall-clock alone
-   cannot be the primary check here: interleaved same-day runs gave
-   HEAD 293k-816k rows/s under HEALTHY sentinels and the pre-fix tree
-   122k-536k — the classes OVERLAP under this host's sentinel-blind
-   oscillation, so any fixed or drift-scaled floor either spuriously
-   fails HEAD or lets a warm regressed run through.)
+1. STRUCTURAL (primary, deterministic): apply a parquet-file change
+   batch of STRUCT_ROWS rows (STRUCT_KEYS keys) to a target holding
+   STRUCT_KEYS rows, and assert
+   - the raw batch is scanned exactly once: the epoch's jobs read
+     exactly STRUCT_ROWS + STRUCT_KEYS records from data sources (base
+     scan plus one batch scan, summed from Spark's status store). An
+     epoch that re-reads its batch per downstream read (no cache and
+     no exchange reuse) reads 2 x STRUCT_ROWS or more;
+   - no frame the sink persists is O(batch rows), on the unpartitioned
+     apply (which persists nothing: one action reuses its collapse
+     exchange) and on the partitioned apply (which persists the
+     collapsed frame, O(distinct keys), for its discovery collect).
+   Both are immune to host noise: the pre-fix tree (raw-batch persist)
+   fails the footprint bound at ANY drift, on ANY host. (r9 calibration
+   measured why wall-clock alone cannot be the primary check here:
+   interleaved same-day runs gave HEAD 293k-816k rows/s under HEALTHY
+   sentinels and the pre-fix tree 122k-536k — the classes OVERLAP under
+   this host's sentinel-blind oscillation, so any fixed or drift-scaled
+   floor either spuriously fails HEAD or lets a warm regressed run
+   through.)
 
 2. WALL-CLOCK floor (catastrophic catch): the 20M-row probe (sf0.1
    events ×200) must clear ``FLOOR / max(drift, 1)`` rows/s on its best
@@ -37,9 +45,10 @@ JSON list, one record per run, newest last — so degraded-window grades
 can be re-audited (r8-advisor ask; the r9 advisor caught the 'w'-mode
 write that silently kept only the latest record). Decision
 arithmetic is unit-pinned in tests/test_throughput_gate_decision.py;
-the structural property is ALSO a standing pytest
-(tests/test_merge_persist_footprint.py) so it runs in step 1 of the
-round gate too.
+the structural check is ALSO a standing pytest at 200k rows
+(tests/test_merge_persist_footprint.py, which also shows the scan count
+catches a second batch scan) so it runs in step 1 of the round gate
+too.
 
 Usage: python tools/throughput_gate.py [floor_rows_per_sec] [mult]
 Exit 0 = structural pass AND floor cleared; exit 1 = either failed.
@@ -47,9 +56,11 @@ Exit 0 = structural pass AND floor cleared; exit 1 = either failed.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import sys
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -70,40 +81,105 @@ def decide(best_rps: float, floor: float, drift: float) -> tuple[bool, float]:
     return best_rps >= effective, effective
 
 
-def structural_check(spark, tmpdir: str) -> tuple[bool, list[int]]:
-    """Apply one REPLACE-engine batch (STRUCT_ROWS rows, STRUCT_KEYS
-    keys) with DataFrame.persist spied; pass iff every persisted frame
-    is O(keys). The pre-fix sink persists the raw batch (1M rows) and
-    fails deterministically. Returns (passed, persisted_row_counts)."""
+@contextmanager
+def spied_persists():
+    """Yields the list of every DataFrame persisted inside the block."""
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from gravity_spark.sinks.parquet_merge import ParquetMergeTarget
-
-    persisted: list[DataFrame] = []
+    persisted: list = []
     orig = DataFrame.persist
 
     def spy(self, *a, **k):
         persisted.append(self)
         return orig(self, *a, **k)
 
-    target = ParquetMergeTarget(
-        spark, os.path.join(tmpdir, "struct_target"), ["k"], "k long, v long"
-    )
-    changes = spark.range(STRUCT_ROWS).selectExpr(
-        f"id % {STRUCT_KEYS} AS k",
+    DataFrame.persist = spy
+    try:
+        yield persisted
+    finally:
+        DataFrame.persist = orig
+
+
+_groups = itertools.count()
+
+
+def input_records(spark, fn) -> int:
+    """Records read from data sources by the Spark jobs ``fn`` runs,
+    summed over their stages in Spark's status store (jobs found by job
+    group, so other threads' jobs are not counted)."""
+    sc = spark.sparkContext
+    group = f"input_records_{next(_groups)}"
+    sc.setJobGroup(group, "input record count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    total = 0
+    for job in sc.statusTracker().getJobIdsForGroup(group):
+        ids = store.job(job).stageIds()
+        for i in range(ids.size()):
+            total += store.lastStageAttempt(ids.apply(i)).inputRecords()
+    return total
+
+
+def structural_check(
+    spark, tmpdir: str, rows: int = STRUCT_ROWS, keys: int = STRUCT_KEYS
+) -> tuple[bool, dict]:
+    """Apply one REPLACE-engine batch of ``rows`` rows over ``keys``
+    keys, read from parquet, to an unpartitioned target holding ``keys``
+    rows and to a partitioned one. Passes iff the unpartitioned epoch
+    reads exactly ``rows + keys`` source records (one batch scan) and
+    every frame either apply persists is O(keys), the partitioned one
+    persisting at least one. Returns (passed, measurements)."""
+    from gravity_spark.sinks.parquet_merge import ParquetMergeTarget
+
+    src = os.path.join(tmpdir, "struct_batch")
+    spark.range(rows).selectExpr(
+        f"id % {keys} AS k",
+        f"id % {keys} % 4 AS p",
         "id AS v",
         "'update' AS op",
         "id AS seq",
+    ).write.mode("overwrite").parquet(src)
+    batch = spark.read.schema("k long, p long, v long, op string, seq long").parquet(src)
+
+    flat = ParquetMergeTarget(
+        spark, os.path.join(tmpdir, "struct_target"), ["k"], "k long, v long"
     )
-    DataFrame.persist = spy
-    try:
-        target.apply_batch(changes, epoch_id=1)
-    finally:
-        DataFrame.persist = orig
-    counts = [df.count() for df in persisted]
-    # tolerance 2x keys: the collapsed frame is exactly STRUCT_KEYS rows;
+    flat.apply_batch(
+        spark.range(keys).selectExpr("id AS k", "-1 AS v", "'insert' AS op", "-1 AS seq"),
+        epoch_id=0,
+    )
+    with spied_persists() as flat_persisted:
+        scanned = input_records(spark, lambda: flat.apply_batch(batch.drop("p"), epoch_id=1))
+    part = ParquetMergeTarget(
+        spark,
+        os.path.join(tmpdir, "struct_partitioned"),
+        ["k"],
+        "k long, p long, v long",
+        partition_col="p",
+    )
+    with spied_persists() as part_persisted:
+        part.apply_batch(batch, epoch_id=1)
+    record = {
+        "input_records": scanned,
+        "expected_input_records": rows + keys,
+        "persisted_rows": [df.count() for df in flat_persisted],
+        "partitioned_persisted_rows": [df.count() for df in part_persisted],
+        "persist_bound": 2 * keys,
+    }
+    # tolerance 2x keys: the collapsed frame is exactly ``keys`` rows;
     # anything near batch size is the regression
-    return all(c <= 2 * STRUCT_KEYS for c in counts) and counts != [], counts
+    persisted = record["persisted_rows"] + record["partitioned_persisted_rows"]
+    passed = (
+        scanned == rows + keys
+        and record["partitioned_persisted_rows"] != []
+        and all(c <= 2 * keys for c in persisted)
+    )
+    return passed, record
 
 
 def main() -> int:
@@ -125,10 +201,13 @@ def main() -> int:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     with tempfile.TemporaryDirectory(prefix="tp_gate_") as td:
-        struct_ok, struct_counts = structural_check(spark, td)
+        struct_ok, struct = structural_check(spark, td)
     print(
-        f"structural: persisted row counts {struct_counts} "
-        f"(bound {2 * STRUCT_KEYS}) -> {'pass' if struct_ok else 'FAIL'}",
+        f"structural: {struct['input_records']:,} source records read "
+        f"(expected {struct['expected_input_records']:,}); persisted row "
+        f"counts {struct['persisted_rows']} unpartitioned, "
+        f"{struct['partitioned_persisted_rows']} partitioned "
+        f"(bound {struct['persist_bound']}) -> {'pass' if struct_ok else 'FAIL'}",
         flush=True,
     )
 
@@ -156,8 +235,11 @@ def main() -> int:
     record = {
         "gate": "cdc_apply_path",
         "structural_pass": struct_ok,
-        "structural_persisted_rows": struct_counts,
-        "structural_bound": 2 * STRUCT_KEYS,
+        "structural_input_records": struct["input_records"],
+        "structural_expected_input_records": struct["expected_input_records"],
+        "structural_persisted_rows": struct["persisted_rows"],
+        "structural_partitioned_persisted_rows": struct["partitioned_persisted_rows"],
+        "structural_bound": struct["persist_bound"],
         "best_rows_per_sec": round(best),
         "floor": round(FLOOR),
         "effective_floor": round(effective),
@@ -183,7 +265,7 @@ def main() -> int:
     print(json.dumps(record))
     if passed:
         print(
-            f"THROUGHPUT GATE: pass (structural O(keys) footprint; "
+            f"THROUGHPUT GATE: pass (structural: one batch scan, O(keys) footprint; "
             f"{best:,.0f} >= {effective:,.0f} rows/s"
             + (
                 f"; floor drift-scaled {FLOOR:,.0f}/{drift:.2f}x)"
@@ -195,8 +277,9 @@ def main() -> int:
     why = []
     if not struct_ok:
         why.append(
-            f"persisted footprint {struct_counts} exceeds O(keys) bound "
-            f"{2 * STRUCT_KEYS} — the r7 raw-persist regression class"
+            f"structural check {struct} failed: the batch is scanned more "
+            "than once, or a persisted footprint exceeds the O(keys) bound "
+            "(the r7 raw-persist regression class)"
         )
     if not floor_ok:
         why.append(
