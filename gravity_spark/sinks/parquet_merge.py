@@ -368,15 +368,15 @@ class ParquetMergeTarget(_ScopedVersions):
         ``merged(keys)`` is the batch merged into those scopes' state.
 
         The root scope is always the one touched scope, so an
-        unpartitioned target runs no discovery job, and its merge is
-        written as planned (the module's write rule): the untouched rows
-        keep the current version's scan splits and the upserts arrive as
-        one AQE-coalesced shuffle read, so a version is its base's files
-        plus about one. The REBALANCE this once carried fought slivers
-        (32 x ~1 KB files per version) that came from a persisted upsert
-        side, whose partitions AQE never coalesces; without the cache
-        they are gone, and a REBALANCE would reshuffle the whole table
-        every epoch.
+        unpartitioned target runs no discovery job. Its merge is written
+        as planned (the module's write rule): exchange reuse, not a
+        cache, serves the epoch frame's two reads, so the upserts arrive
+        as one AQE-coalesced shuffle read and the untouched rows keep the
+        current version's scan splits; a version is its base's files
+        plus about one. No REBALANCE: it would reshuffle the whole table
+        every epoch, and the slivers it once prevented (32 x ~1 KB files
+        per version) came from a persisted upsert side, whose partitions
+        AQE never coalesces.
         """
         if self.partition_col is None:
             return {None: self._write_next(scopes, None, merged([None]))}
