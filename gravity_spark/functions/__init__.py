@@ -7,10 +7,12 @@ from gravity_spark.functions.text import (  # noqa: F401
 )
 from gravity_spark.functions.dedup import (  # noqa: F401
     exact_dedup,
-    minhash_signatures,
-    minhash_lsh_pairs,
-    simhash,
-    ngram_jaccard_pairs,
+    minhash_signature,
+    minhash_bands,
+    banded_pairs,
+    near_dup_components,
+    simhash16,
+    subblocked_self_join,
 )
 from gravity_spark.functions.similarity import (  # noqa: F401
     cosine_similarity,

@@ -1,19 +1,28 @@
 """Deduplication operators for training-data pipelines.
 
-Four tiers, all shuffle-conscious:
+Tiers, all shuffle-conscious:
 
-- exact:    fingerprint → groupBy → keep min-id. One shuffle on a short
+- exact:    fingerprint → window → keep min-id. One shuffle on a short
             hash key; at 100 TB the shuffle carries (fingerprint, id)
             pairs only, never the documents.
-- MinHash+LSH: shingle → per-seed min-hash signature (computed in a
-            single codegen'd projection) → band → bucket self-join.
-            Candidate generation is a bucket-key equi-join, so the
-            quadratic blow-up is confined to same-bucket groups.
-- SimHash:  64-bit bit-vote fingerprint; near-dups = small hamming
-            distance within a band bucket.
-- n-gram Jaccard: exact verification on candidate pairs only.
+- MinHash+LSH: one md5 per distinct token, 16 orderings derived by
+            hex-string rotation, 2 bands of 8 → (doc, band, bucket)
+            rows → bucket equi-join. Candidate generation is an
+            equi-join, so the quadratic work is confined to
+            same-bucket groups; connected components over the same
+            bucket membership turn pairs into clusters.
+- SimHash:  16-bit md5 bit-vote fingerprint; near-dups = small
+            hamming distance within a band bucket.
+- blocked Jaccard/containment: exact verification inside a blocking
+            key, sub-blocked for parallelism.
 
-All hashing is xxhash64/md5 (JVM built-ins); no Python in the path.
+Every hash is md5 hex, so each operator's DuckDB oracle reproduces it
+bit for bit. The MinHash signature has two physical forms with equal
+values: batch input takes a token explode + hash aggregation, and a
+stream takes a row-local projection, because a groupBy on a stream
+becomes a stateful aggregation (the streaming gate must stay
+stateless up to its own operator). The row-local form is 3-4x slower
+on batch input, so the form follows ``isStreaming`` and nothing else.
 """
 
 from __future__ import annotations
@@ -24,6 +33,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gravity_spark.functions.text import fingerprint, tokenize
+
+NUM_MINHASH = 16
+MINHASH_BANDS = 2  # wide bands (8 hashes) -> collision P ~ jaccard^8
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -37,167 +49,150 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct k-char shingles of the normalized text."""
-    norm = F.array_join(tokenize(text), " ")
-    n = F.length(norm)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: norm.substr(i, F.lit(k))))
+def _rot(h: Column, i: int) -> Column:
+    """i-th MinHash ordering of a 32-char md5 hex: h[2i:] || h[:2i].
+    The min over a rotation is a valid (if correlated) min-hash, so one
+    md5 per token buys all 16 orderings."""
+    if i == 0:
+        return h
+    return F.concat(F.substring(h, 2 * i + 1, 32), F.substring(h, 1, 2 * i))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_k: int = 5,
-    out_col: str = "minhash",
-) -> DataFrame:
-    """num_hashes-wide MinHash signature per document.
+def minhash_signature(docs: DataFrame) -> DataFrame:
+    """(doc_id, m0..m15) over the distinct tokens of ``docs.text``; a
+    doc with no tokens has no row.
 
-    Each hash family member is xxhash64 salted with the seed index; the
-    signature is an array<long> computed in one projection — ~O(seeds ×
-    shingles) JVM ops per doc, no shuffle.
-    """
-    sh = char_shingles(F.col(text_col), shingle_k)
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.array_min(F.transform(sh, lambda s: F.xxhash64(s, seed))),
+    Batch input: explode tokens, md5 each once, min per rotation in one
+    hash aggregation on doc_id. Streaming input: the same values from
+    row-local array expressions, so no stateful aggregation is planned.
+    The unrolled per-rotation transforms beat one nested transform over
+    all 128 rotations by ~2x (higher-order functions are interpreted
+    either way; the extra lambda layer is pure overhead)."""
+    toks = F.array_distinct(tokenize(F.col("text")))
+    if docs.isStreaming:
+        hs = F.transform(toks, lambda t: F.md5(t))
+        return docs.filter(F.size(toks) > 0).select(
+            "doc_id",
+            *[
+                F.array_min(F.transform(hs, lambda h: _rot(h, i))).alias(f"m{i}")
+                for i in range(NUM_MINHASH)
+            ],
+        )
+    tok = docs.select("doc_id", F.explode(toks).alias("t")).select(
+        "doc_id", F.md5("t").alias("h")
     )
-    return df.withColumn(out_col, sig)
+    return tok.groupBy("doc_id").agg(
+        *[F.min(_rot(F.col("h"), i)).alias(f"m{i}") for i in range(NUM_MINHASH)]
+    )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "minhash",
-    bands: int = 8,
-) -> DataFrame:
-    """Candidate near-dup pairs via banded LSH on the signature.
-
-    Splits the signature into ``bands`` bands, hashes each band, and
-    self-joins on (band_index, band_hash). Returns distinct (id_a, id_b)
-    with id_a < id_b. The join key is a long pair, so the shuffle volume
-    is O(docs × bands) regardless of document size.
-    """
-    sig_len_band = F.floor(F.size(F.col(sig_col)) / bands).cast("int")
-    banded = df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.array_join(
-                        F.transform(
-                            F.slice(F.col(sig_col), b * sig_len_band + 1, sig_len_band),
-                            lambda x: x.cast("string"),
-                        ),
-                        ",",
-                    )
-                ),
+def minhash_bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band, bh) in long form: bh = md5 of the band's 8
+    concatenated minima. The LSH bucket join is then an EQUI-join on
+    (band, bh), so Catalyst picks SortMergeJoin/BroadcastHashJoin and
+    the quadratic work stays in same-bucket groups (an OR of per-band
+    equalities would force a nested-loop join at scale)."""
+    width = NUM_MINHASH // MINHASH_BANDS
+    band_structs = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.md5(
+                    F.concat(*[F.col(f"m{i}") for i in range(b * width, (b + 1) * width)])
+                ).alias("bh"),
             )
-        ).alias("band", "band_hash"),
+            for b in range(MINHASH_BANDS)
+        ]
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
+    return sig.select("doc_id", F.explode(band_structs).alias("e")).select(
+        "doc_id", F.col("e.band").alias("band"), F.col("e.bh").alias("bh")
+    )
+
+
+def banded_pairs(banded: DataFrame, extra: Column | None = None) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of docs sharing a bucket.
+
+    ``banded`` has (doc_id, band, bh) plus any payload; the self-join is
+    an equi-join on (band, bh) with sides aliased ``a`` and ``b``, and
+    ``extra`` is an optional verify predicate over those aliases
+    (e.g. a hamming bound). Persist ``banded`` when it is expensive:
+    both join sides read it."""
+    a, b = banded.alias("a"), banded.alias("b")
+    cond = F.col("a.doc_id") < F.col("b.doc_id")
+    if extra is not None:
+        cond = cond & extra
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
+        a.join(b, ["band", "bh"])
+        .filter(cond)
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
         .distinct()
     )
 
 
-def minhash_jaccard_estimate(sig_a: Column, sig_b: Column) -> Column:
-    """Estimated Jaccard = fraction of agreeing signature positions."""
-    agree = F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v))
-    return agree / F.size(sig_a).cast("double")
-
-
-def simhash(text: Column, bits: int = 64) -> Column:
-    """SimHash: per-token xxhash64, bit-vote, sign → bits-wide fingerprint.
-
-    Returned as array<int> of 0/1 (LSB first) — hamming distance is then
-    a zip_with/filter, and band-bucketing slices the array.
-    """
-    toks = tokenize(text)
-    # bit positions must be Python ints (shiftright takes a literal);
-    # the per-token bit vector is one F.array of `bits` expressions
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), bits),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    (F.shiftright(F.xxhash64(t), b).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
-                    for b in range(bits)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
+def near_dup_components(docs: DataFrame) -> DataFrame:
+    """(doc_id, component) for every doc in ``docs``: MinHash bands →
+    bipartite doc↔bucket label propagation. component = min doc id of
+    the transitively linked near-dup group; docs with no tokens (no
+    bands) and docs in no shared bucket are singletons."""
+    membership = minhash_bands(minhash_signature(docs)).select(
+        "doc_id", F.concat_ws("#", F.col("band").cast("string"), "bh").alias("bucket")
     )
-    return F.transform(votes, lambda v: F.when(v > 0, F.lit(1)).otherwise(F.lit(0)))
+    # null-bucket rows never equi-join, so they only seed the vertex set
+    singleton = docs.select("doc_id", F.lit(None).cast("string").alias("bucket"))
+    return connected_components_bipartite(membership.unionByName(singleton))
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    return F.size(F.filter(F.zip_with(a, b, lambda x, y: x != y), lambda v: v))
-
-
-def simhash_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 64,
-    bands: int = 8,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs by SimHash: band-bucket candidates, verify by
-    hamming distance ≤ max_hamming."""
-    with_sh = df.select(F.col(id_col), simhash(F.col(text_col), bits).alias("sh"))
-    band_width = bits // bands
-    banded = with_sh.select(
-        id_col,
-        "sh",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.array_join(
-                        F.transform(F.slice(F.col("sh"), b * band_width + 1, band_width), lambda x: x.cast("string")),
-                        "",
-                    )
-                ),
-            )
-        ).alias("band", "band_hash"),
+def simhash16(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash16): per-bit vote over the distinct tokens' md5,
+    bit p taken from hex digit p // 4 (MSB first within the digit) —
+    reproducible in any engine with md5 and integer arithmetic."""
+    bits = 16
+    toks = docs.select(
+        "doc_id", F.explode(F.array_distinct(tokenize(F.col("text")))).alias("t")
     )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    h = F.md5(F.col("t"))
+    aggs = []
+    for p in range(bits):
+        d = F.instr(F.lit("0123456789abcdef"), F.substring(h, p // 4 + 1, 1)) - 1
+        bit = F.floor(d / (2 ** (3 - p % 4))).cast("long") % 2
+        aggs.append(
+            F.when(F.sum(2 * bit - 1) > 0, F.lit(1 << p)).otherwise(F.lit(0)).alias(f"b{p}")
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return cand.filter(hamming_distance(F.col("sh_a"), F.col("sh_b")) <= max_hamming).select(
-        "id_a", "id_b"
-    )
+    votes = toks.groupBy("doc_id").agg(*aggs)
+    total = F.col("b0")
+    for p in range(1, bits):
+        total = total + F.col(f"b{p}")
+    return votes.select("doc_id", total.alias("simhash16"))
 
+
+def subblocked_self_join(g: DataFrame, block: str, on: Column | None = None) -> DataFrame:
+    """Self-join of ``g`` on ``block`` with a.doc_id < b.doc_id, sides
+    aliased ``a`` and ``b``; ``on`` adds a join predicate over them.
+
+    A block key with few values caps the quadratic verify at that many
+    tasks, so side A is replicated across 8 sub-blocks and side B is
+    keyed (block, doc_id % 8): the pair set is identical with 8x the
+    schedulable units. The explicit numbered repartition keeps AQE from
+    coalescing this byte-small but CPU-heavy join down to one task."""
+    nsub = 8
+    a = (
+        g.withColumn("sb", F.explode(F.sequence(F.lit(0), F.lit(nsub - 1))))
+        .repartition(64, block, "sb")
+        .alias("a")
+    )
+    b = (
+        g.withColumn("sb", (F.col("doc_id") % nsub).cast("int"))
+        .repartition(64, block, "sb")
+        .alias("b")
+    )
+    cond = (
+        (F.col(f"a.{block}") == F.col(f"b.{block}"))
+        & (F.col("a.sb") == F.col("b.sb"))
+        & (F.col("a.doc_id") < F.col("b.doc_id"))
+    )
+    if on is not None:
+        cond = cond & on
+    return a.join(b, cond)
 
 def _persistent_rdd_ids(df: DataFrame) -> set[int]:
     sc = df.sparkSession.sparkContext
@@ -535,55 +530,6 @@ def connected_components_bipartite(
     if m_id is not None:
         _unpersist_rdds(labels, {m_id})
     return labels.select(F.col("v").alias(id_col), F.col("label").alias("component"))
-
-
-def word_ngrams(text: Column, n: int = 3) -> Column:
-    toks = tokenize(text)
-    cnt = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(cnt, F.lit(1))),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        )
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.8,
-    group_col: str | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs.
-
-    Pairs are scoped to ``group_col`` buckets when given (e.g. an LSH
-    band or `source`); otherwise all-pairs — acceptable only for small
-    relations or post-LSH candidates. Returns (id_a, id_b, jaccard).
-    """
-    grams = df.select(
-        F.col(id_col),
-        *([F.col(group_col)] if group_col else []),
-        word_ngrams(F.col(text_col), n).alias("g"),
-    )
-    a = grams.alias("a")
-    b = grams.alias("b")
-    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    if group_col:
-        cond = cond & (F.col(f"a.{group_col}") == F.col(f"b.{group_col}"))
-    inter = F.size(F.array_intersect(F.col("a.g"), F.col("b.g")))
-    union = F.size(F.array_union(F.col("a.g"), F.col("b.g")))
-    jac = F.when(union > 0, inter / union.cast("double")).otherwise(F.lit(0.0))
-    return (
-        a.join(b, cond)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            jac.alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
 
 
 def prefix_filter_pairs(

@@ -19,6 +19,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gravity_spark.functions.dedup import banded_pairs
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -153,7 +155,7 @@ def embedding_near_dup_pairs(
     self-join is O((n/64)²) — a scale-killer. Now each vector gets one
     bucket id per band (default 8 bands × 8 sign bits = 256 buckets per
     band, 2048 (band, bucket) keys total); candidates are pairs sharing
-    ANY band's bucket (same shape as minhash_lsh_pairs in dedup.py).
+    ANY band's bucket (the banded self-join of dedup.banded_pairs).
     The self-join key is (band, bucket), so per-group size shrinks as
     dims_per_band grows — tune bits per band, not the algorithm, as the
     corpus grows. Candidate pairs are deduped BEFORE the cosine verify
@@ -180,26 +182,10 @@ def embedding_near_dup_pairs(
     # 2 sides) and again through the distinct. Vectors attach to the
     # deduped pair set with two id-keyed joins, so each embedding
     # crosses a shuffle once per side.
-    keys = corpus.select(F.col(id_col), F.explode(entries).alias("bb")).select(
-        F.col(id_col),
-        F.col("bb.band").alias("__band"),
-        F.col("bb.bucket").alias("__bucket"),
-    )
-    a = keys.alias("a")
-    b = keys.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.__band") == F.col("b.__band"))
-            & (F.col("a.__bucket") == F.col("b.__bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    keys = corpus.select(
+        F.col(id_col).alias("doc_id"), F.explode(entries).alias("bb")
+    ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bh"))
+    pairs = banded_pairs(keys)
     va = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"))
     vb = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"))
     cand = pairs.join(va, "id_a").join(vb, "id_b")

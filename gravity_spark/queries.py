@@ -29,8 +29,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gravity_spark.core.envelope import events_to_changes
+from gravity_spark.functions import dedup as dd
 from gravity_spark.functions import text as tx
 from gravity_spark.functions import similarity as sim
+from gravity_spark.functions.dedup import MINHASH_BANDS, NUM_MINHASH
 from gravity_spark.operators.collapse import collapse_last_write_wins
 from gravity_spark.tables import parquet_schema, read_parquet
 
@@ -2834,33 +2836,16 @@ def doc_fingerprint(spark, sf_dir):
     """,
 )
 def dedup_exact(spark, sf_dir):
-    from gravity_spark.functions.dedup import exact_dedup
-
     docs = T(spark, sf_dir, "documents")
-    return exact_dedup(docs).select("doc_id")
+    return dd.exact_dedup(docs).select("doc_id")
 
 
-_NUM_MINHASH = 16
-_MINHASH_BANDS = 2  # wide bands (8 hashes) -> collision P ~ jaccard^8
-
-# MinHash family: ONE md5 per distinct token, then 16 derived orderings
-# via hex-string rotation — rot_i(h) = h[2i:] || h[:2i]. The min over a
-# rotation is a valid (if correlated) min-hash; hashing once instead of
-# per-seed makes the signature ~16x cheaper at 100 TB scale. The
-# salted-xxhash64 family in functions/dedup.py is the production-quality
-# variant; this one is the cross-engine-reproducible mode (md5 hex is
-# identical in every engine).
+# The MinHash oracles rebuild dd.minhash_signature in SQL: one md5 per
+# distinct token, rotation i of the hex string as the i-th ordering.
 
 
 def _rot_sql(i: int) -> str:
     return "h" if i == 0 else f"(substr(h, {2 * i + 1}) || substr(h, 1, {2 * i}))"
-
-
-def _rot_col(i: int):
-    h = F.col("h")
-    if i == 0:
-        return h
-    return F.concat(F.expr(f"substring(h, {2 * i + 1})"), F.substring(h, 1, 2 * i))
 
 
 _SIG_CTE = f"""
@@ -2868,22 +2853,12 @@ _SIG_CTE = f"""
       SELECT doc_id, md5(t) AS h
       FROM (SELECT doc_id, unnest(list_distinct({_TOKS})) AS t FROM documents)
     ),
-    sig AS (SELECT doc_id, {', '.join(f'min({_rot_sql(i)}) AS m{i}' for i in range(_NUM_MINHASH))}
+    sig AS (SELECT doc_id, {', '.join(f'min({_rot_sql(i)}) AS m{i}' for i in range(NUM_MINHASH))}
             FROM tok GROUP BY doc_id)
 """
 
 
-def _sig_df(spark, sf_dir):
-    docs = T(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", F.explode(F.array_distinct(tx.tokenize(F.col("text")))).alias("t")
-    ).select("doc_id", F.md5("t").alias("h"))
-    return tok.groupBy("doc_id").agg(
-        *[F.min(_rot_col(i)).alias(f"m{i}") for i in range(_NUM_MINHASH)]
-    )
-
-
-_SIG_JOINED = " || ',' || ".join(f"m{i}" for i in range(_NUM_MINHASH))
+_SIG_JOINED = " || ',' || ".join(f"m{i}" for i in range(NUM_MINHASH))
 
 
 @register(
@@ -2896,15 +2871,15 @@ _SIG_JOINED = " || ',' || ".join(f"m{i}" for i in range(_NUM_MINHASH))
     """,
 )
 def dedup_minhash_signature(spark, sf_dir):
-    sig = _sig_df(spark, sf_dir)
+    sig = dd.minhash_signature(T(spark, sf_dir, "documents"))
     return sig.select(
         "doc_id",
-        F.concat_ws(",", *[F.col(f"m{i}") for i in range(_NUM_MINHASH)]).alias("minhash"),
+        F.concat_ws(",", *[F.col(f"m{i}") for i in range(NUM_MINHASH)]).alias("minhash"),
     )
 
 
 def _minhash_pairs_sql() -> str:
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
+    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
     band_hashes = [
         f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
         for b in range(bands)
@@ -2918,45 +2893,16 @@ def _minhash_pairs_sql() -> str:
     """
 
 
-def _banded_df(spark, sf_dir):
-    """(doc_id, band, bh) in long form — LSH bucket join is an EQUI-join
-    on (band, bh), so Catalyst picks SortMergeJoin/BroadcastHashJoin and
-    the quadratic work stays confined to same-bucket groups. (An OR of
-    per-band equalities would force a nested-loop join at scale.)"""
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
-    sig = _sig_df(spark, sf_dir)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat(*[F.col(f"m{i}") for i in range(b * width, (b + 1) * width)])
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select("doc_id", F.explode(band_structs).alias("e")).select(
-        "doc_id", F.col("e.band").alias("band"), F.col("e.bh").alias("bh")
-    )
-
-
 @register("dedup_minhash_pairs", _minhash_pairs_sql())
 def dedup_minhash_pairs(spark, sf_dir):
     # persist: a self-join would otherwise recompute the signature
     # aggregation once per side
-    banded = _banded_df(spark, sf_dir).persist()
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
+    sig = dd.minhash_signature(T(spark, sf_dir, "documents"))
+    return dd.banded_pairs(dd.minhash_bands(sig).persist())
 
 
 def _bucket_stats_sql() -> str:
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
+    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
     band_hashes = [
         f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
         for b in range(bands)
@@ -2989,7 +2935,7 @@ def dedup_bucket_stats(spark, sf_dir):
     over (bucket) then (size); the documents never ride either
     shuffle."""
     sizes = (
-        _banded_df(spark, sf_dir)
+        dd.minhash_bands(dd.minhash_signature(T(spark, sf_dir, "documents")))
         .groupBy("band", "bh")
         .agg(F.count(F.lit(1)).alias("sz"))
     )
@@ -3016,7 +2962,7 @@ def _components_sql() -> str:
     through their bucket-min; bucket-less docs stay singletons. The
     component label min-over-bucket-mins equals the true min doc id:
     a component's min doc is itself its bucket's min."""
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
+    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
     band_hashes = [
         f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
         for b in range(bands)
@@ -3069,26 +3015,9 @@ def dedup_components(spark, sf_dir):
     10k membership rows vs millions of pair edges. Docs in no pair
     (unshared buckets) stay singletons, exactly as the oracle seeds
     every doc with its own label."""
-    comp = _dedup_component_labels(spark, sf_dir)
+    comp = dd.near_dup_components(T(spark, sf_dir, "documents"))
     w = Window.partitionBy("component")
     return comp.withColumn("csize", F.count(F.lit(1)).over(w))
-
-
-def _dedup_component_labels(spark, sf_dir):
-    """(doc_id, component) labels from the bipartite doc↔bucket
-    propagation — the shared core of `dedup_components` and
-    `corpus_dedup_pipeline` (which add their own per-component
-    windows)."""
-    from gravity_spark.functions.dedup import connected_components_bipartite
-
-    docs = T(spark, sf_dir, "documents").select("doc_id")
-    membership = _banded_df(spark, sf_dir).select(
-        "doc_id", F.concat_ws("#", F.col("band").cast("string"), "bh").alias("bucket")
-    )
-    # union keeps docs with no tokens (no bands) as singleton vertices
-    singleton = docs.select("doc_id", F.lit(None).cast("string").alias("bucket"))
-    # null-bucket rows never equi-join, so they only seed the vertex set
-    return connected_components_bipartite(membership.unionByName(singleton))
 
 
 def _corpus_dedup_sql() -> str:
@@ -3146,7 +3075,7 @@ def corpus_dedup_pipeline(spark, sf_dir):
     component, the quality join reshuffled by doc_id, and the rank
     window shuffled by component again (three exchanges of the corpus
     vs two)."""
-    comp = _dedup_component_labels(spark, sf_dir)
+    comp = dd.near_dup_components(T(spark, sf_dir, "documents"))
     quality = text_stats(spark, sf_dir).select("doc_id", "quality")
     j = comp.join(quality, "doc_id")
     w = Window.partitionBy("component").orderBy(
@@ -3544,10 +3473,8 @@ def substring_dedup_spans(spark, sf_dir):
     maximal per-doc spans (see functions/dedup.py::substring_dedup_spans
     for the 100 TB shape — all linear stages, shuffle keyed on gram
     hash)."""
-    from gravity_spark.functions.dedup import substring_dedup_spans as _spans
-
     docs = T(spark, sf_dir, "documents")
-    return _spans(docs, k=_SPAN_K)
+    return dd.substring_dedup_spans(docs, k=_SPAN_K)
 
 
 @register(
@@ -3673,27 +3600,7 @@ def _simhash_sql(bits: int = 16) -> str:
 
 @register("dedup_simhash", _simhash_sql())
 def dedup_simhash(spark, sf_dir):
-    bits = 16
-    docs = T(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(F.array_distinct(tx.tokenize(F.col("text")))).alias("t"))
-    h = F.md5(F.col("t"))
-    parts = []
-    for p in range(bits):
-        digit = p // 4 + 1
-        shift = 3 - (p % 4)
-        d = F.instr(F.lit("0123456789abcdef"), F.substring(h, digit, 1)) - 1
-        bit = F.floor(d / (2 ** shift)).cast("long") % 2
-        parts.append((p, bit))
-    aggs = [
-        F.when(F.sum(2 * bit - 1) > 0, F.lit(1 << p)).otherwise(F.lit(0)).alias(f"b{p}")
-        for p, bit in parts
-    ]
-    votes = toks.groupBy("doc_id").agg(*aggs)
-    total = votes.columns[1:]
-    expr = F.col(total[0])
-    for c in total[1:]:
-        expr = expr + F.col(c)
-    return votes.select("doc_id", expr.alias("simhash16"))
+    return dd.simhash16(T(spark, sf_dir, "documents"))
 
 
 @register(
@@ -3728,40 +3635,16 @@ def dedup_ngram_jaccard(spark, sf_dir):
     g = docs.select(
         "doc_id", "source", F.array_distinct(tx.tokenize(F.col("text"))).alias("toks")
     )
-    # sub-block the blocked self-join: a block key of only ~20 sources
-    # caps parallelism at 20 tasks; replicating side A across 8
-    # sub-blocks of side B (join key (source, doc_id%8)) yields the
-    # SAME pair set with 8x the schedulable units
-    nsub = 8
-    # explicit numbered repartition: AQE would otherwise coalesce this
-    # byte-small but CPU-heavy join down to one task
-    a = (
-        g.withColumn("sb", F.explode(F.sequence(F.lit(0), F.lit(nsub - 1))))
-        .repartition(64, "source", "sb")
-        .alias("a")
-    )
-    b = (
-        g.withColumn("sb", (F.col("doc_id") % nsub).cast("int"))
-        .repartition(64, "source", "sb")
-        .alias("b")
-    )
     la, lb = F.size(F.col("a.toks")), F.size(F.col("b.toks"))
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.sb") == F.col("b.sb"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            # length-ratio prefilter (J >= t ⟹ |A|/|B| ∈ [t, 1/t]):
-            # prunes pairs BEFORE the O(|A|+|B|) intersect
-            & (2 * F.least(la, lb) >= F.greatest(la, lb)),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks"))).alias("inter"),
-            (F.size(F.col("a.toks")) + F.size(F.col("b.toks"))).alias("total"),
-        )
+    # length-ratio prefilter (J >= t ⟹ |A|/|B| ∈ [t, 1/t]): prunes
+    # pairs BEFORE the O(|A|+|B|) intersect
+    pairs = dd.subblocked_self_join(
+        g, "source", 2 * F.least(la, lb) >= F.greatest(la, lb)
+    ).select(
+        F.col("a.doc_id").alias("id_a"),
+        F.col("b.doc_id").alias("id_b"),
+        F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks"))).alias("inter"),
+        (la + lb).alias("total"),
     )
     union = F.col("total") - F.col("inter")
     jac = F.when(union > 0, F.col("inter") / union.cast("double")).otherwise(F.lit(0.0))
@@ -3807,23 +3690,7 @@ def dedup_containment(spark, sf_dir):
     g = docs.select(
         "doc_id", "source", F.array_distinct(tx.tokenize(F.col("text"))).alias("toks")
     )
-    nsub = 8
-    a = (
-        g.withColumn("sb", F.explode(F.sequence(F.lit(0), F.lit(nsub - 1))))
-        .repartition(64, "source", "sb")
-        .alias("a")
-    )
-    b = (
-        g.withColumn("sb", (F.col("doc_id") % nsub).cast("int"))
-        .repartition(64, "source", "sb")
-        .alias("b")
-    )
-    pairs = a.join(
-        b,
-        (F.col("a.source") == F.col("b.source"))
-        & (F.col("a.sb") == F.col("b.sb"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
+    pairs = dd.subblocked_self_join(g, "source").select(
         F.col("a.doc_id").alias("id_a"),
         F.col("b.doc_id").alias("id_b"),
         F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks"))).alias("inter"),
@@ -3838,13 +3705,13 @@ def dedup_containment(spark, sf_dir):
 
 
 def _lsh_pr_sql() -> str:
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
+    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
     band_hashes = [
         f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
         for b in range(bands)
     ]
     ors = " OR ".join(f"a.bh{b} = b.bh{b}" for b in range(bands))
-    mins = ", ".join(f"min({_rot_sql(i)}) AS m{i}" for i in range(_NUM_MINHASH))
+    mins = ", ".join(f"min({_rot_sql(i)}) AS m{i}" for i in range(NUM_MINHASH))
     return f"""
     -- LSH tuning metric: precision/recall of the banded MinHash
     -- candidates vs exact Jaccard >= 0.5 truth, on a deterministic
@@ -3917,17 +3784,17 @@ def dedup_lsh_precision_recall(spark, sf_dir):
         for r in all_docs.select("source").distinct().orderBy("source").limit(5).collect()
     ]
     docs = all_docs.filter(F.col("source").isin(eval_sources))
-    # signatures for the SAMPLE only (row-local variant — identical
-    # hash family to _sig_df), not the whole corpus. source rides the
-    # banded rows (r10): the pair join then yields (id_a, id_b, sa, sb)
-    # directly and the same-source filter runs BEFORE the distinct —
-    # the old shape re-attached source with two extra equi-joins after
-    # the distinct (two more exchanges over the pair set; source is
-    # functionally dependent on doc_id, so filtering before the
-    # distinct is set-identical). Measured 2.2 s → 1.5 s on the
+    # signatures for the SAMPLE only, not the whole corpus. source
+    # rides the banded rows (r10), which is why this query keeps its
+    # own pair join instead of dd.banded_pairs: the join then yields
+    # (id_a, id_b, sa, sb) directly and the same-source filter runs
+    # BEFORE the distinct — re-attaching source after the distinct
+    # costs two extra equi-joins (two more exchanges over the pair set;
+    # source is functionally dependent on doc_id, so filtering before
+    # the distinct is set-identical). Measured 2.2 s → 1.5 s on the
     # candidate phase warm at sf0.1.
     banded = (
-        _banded_row_local(docs.select("doc_id", "text"))
+        dd.minhash_bands(dd.minhash_signature(docs.select("doc_id", "text")))
         .join(docs.select("doc_id", "source"), "doc_id")
         .persist()
     )
@@ -3952,41 +3819,20 @@ def dedup_lsh_precision_recall(spark, sf_dir):
         "doc_id", "source", F.array_distinct(tx.tokenize(F.col("text"))).alias("toks")
     ).persist()
     # sub-block the truth self-join (r11, guide §2.5): its only equi key
-    # is `source` — 5 distinct values caps the quadratic verify at 5
-    # tasks on any cluster size. Replicating side A across 8 sub-blocks
-    # of side B (join key (source, doc_id%8) — the dedup_ngram_jaccard
-    # template) yields the IDENTICAL pair set with 8x the schedulable
-    # units; explicit numbered repartition because AQE would coalesce
-    # the byte-small but CPU-heavy join down to one task.
-    nsub = 8
-    ta = (
-        g.withColumn("sb", F.explode(F.sequence(F.lit(0), F.lit(nsub - 1))))
-        .repartition(64, "source", "sb")
-        .alias("ta")
-    )
-    tb = (
-        g.withColumn("sb", (F.col("doc_id") % nsub).cast("int"))
-        .repartition(64, "source", "sb")
-        .alias("tb")
-    )
-    la, lb = F.size(F.col("ta.toks")), F.size(F.col("tb.toks"))
-    inter = F.size(F.array_intersect(F.col("ta.toks"), F.col("tb.toks")))
+    # is `source` — 5 distinct values would cap the quadratic verify at
+    # 5 tasks on any cluster size
+    la, lb = F.size(F.col("a.toks")), F.size(F.col("b.toks"))
+    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
     union = la + lb - inter
     truth = (
-        ta.join(
-            tb,
-            (F.col("ta.source") == F.col("tb.source"))
-            & (F.col("ta.sb") == F.col("tb.sb"))
-            & (F.col("ta.doc_id") < F.col("tb.doc_id"))
-            # implied by J >= 0.5: 2·min < max ⟹ 2·inter < union —
-            # prunes pairs before the O(|A|+|B|) intersect
-            & (2 * F.least(la, lb) >= F.greatest(la, lb)),
-        )
+        # implied by J >= 0.5: 2·min < max ⟹ 2·inter < union — prunes
+        # pairs before the O(|A|+|B|) intersect
+        dd.subblocked_self_join(g, "source", 2 * F.least(la, lb) >= F.greatest(la, lb))
         .filter(2 * inter >= union)
         .select(
-            F.col("ta.doc_id").alias("id_a"),
-            F.col("tb.doc_id").alias("id_b"),
-            F.col("ta.source").alias("source"),
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            F.col("a.source").alias("source"),
         )
     ).persist()
     tpc = cs.join(truth.select("id_a", "id_b"), ["id_a", "id_b"]).groupBy(
@@ -4064,8 +3910,6 @@ def dedup_prefix_filter(spark, sf_dir):
     measures the join machinery instead of an unavoidable quadratic
     result write-out.
     """
-    from gravity_spark.functions.dedup import prefix_filter_pairs
-
     docs = T(spark, sf_dir, "documents")
     g = (
         docs.select(
@@ -4075,7 +3919,7 @@ def dedup_prefix_filter(spark, sf_dir):
     )
     # threshold 0.9 as an exact rational; exactness property-tested
     # against brute force in tests/test_dedup_similarity.py
-    return prefix_filter_pairs(g, "doc_id", "toks", t_num=9, t_den=10)
+    return dd.prefix_filter_pairs(g, "doc_id", "toks", t_num=9, t_den=10)
 
 
 _COS_SQL = """
@@ -7262,7 +7106,7 @@ def streaming_sessionize_stateful(spark, sf_dir):
 def _gate_sql() -> str:
     """Sequential truth of the streaming minhash gate: a doc is new iff
     no smaller-id doc shares any LSH band bucket."""
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
+    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
     band_hashes = [
         f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
         for b in range(bands)
@@ -7282,45 +7126,6 @@ def _gate_sql() -> str:
     SELECT doc_id, doc_id NOT IN (SELECT doc_id FROM dup) AS is_new
     FROM documents
     """
-
-
-def _banded_row_local(docs):
-    """(doc_id, band, bh) via pure row-local expressions — the streaming
-    twin of _banded_df: no groupBy, so it composes with a stream without
-    becoming a stateful aggregation. Values identical to _sig_df (same
-    md5-rotation hash family, same lexicographic array_min).
-
-    Form note (measured, round 7): a "smaller codegen" variant with the
-    128 rotations as one nested transform over sequence(0,127) is
-    bit-identical but evaluates ~2x SLOWER warm (0.8-1.0 s vs 0.5 s on
-    a half-corpus batch) — higher-order functions are CodegenFallback
-    either way, and the extra lambda layer is pure interpretation
-    overhead, so the unrolled form stands."""
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
-
-    def rot(h, i):
-        if i == 0:
-            return h
-        return F.concat(F.substring(h, 2 * i + 1, 32), F.substring(h, 1, 2 * i))
-
-    hs = F.transform(
-        F.array_distinct(tx.tokenize(F.col("text"))), lambda t: F.md5(t)
-    )
-    ms = [F.array_min(F.transform(hs, lambda h: rot(h, i))) for i in range(_NUM_MINHASH)]
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(F.concat(*ms[b * width : (b + 1) * width])).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return (
-        docs.filter(F.size(F.array_distinct(tx.tokenize(F.col("text")))) > 0)
-        .select("doc_id", F.explode(band_structs).alias("e"))
-        .select("doc_id", F.col("e.band").alias("band"), F.col("e.bh").alias("bh"))
-    )
 
 
 @register("streaming_minhash_dedup_gate", _gate_sql())
@@ -7376,7 +7181,7 @@ def streaming_minhash_dedup_gate(spark, sf_dir):
         .option("maxFilesPerTrigger", "1")
         .json(stream_dir)
     )
-    gate = minhash_bucket_gate(_banded_row_local(stream))
+    gate = minhash_bucket_gate(dd.minhash_bands(dd.minhash_signature(stream)))
     verdict_dir = f"{tmp}/verdict"
 
     def handle(df, epoch_id):
@@ -8641,14 +8446,14 @@ def verifier_range_counts(spark, sf_dir):
 
 
 def _mh_est_sql() -> str:
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
+    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
     band_hashes = [
         f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
         for b in range(bands)
     ]
     agree = " + ".join(
         f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)"
-        for i in range(_NUM_MINHASH)
+        for i in range(NUM_MINHASH)
     )
     return f"""
     WITH {_SIG_CTE},
@@ -8714,40 +8519,17 @@ def minhash_estimate_error(spark, sf_dir):
     size(array_intersect) over distinct-token arrays equals the old
     matched-token count; pairs with an empty intersection are filtered
     to mirror the old inner est⋈inter join."""
-    sig = _sig_df(spark, sf_dir).persist()
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat(*[F.col(f"m{i}") for i in range(b * width, (b + 1) * width)])
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sig.select("doc_id", F.explode(band_structs).alias("e")).select(
-        "doc_id", F.col("e.band").alias("band"), F.col("e.bh").alias("bh")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(b, ["band", "bh"])
-        .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            # deterministic 1-in-4 pair sample — the sketch-accuracy eval
-            # doesn't need every candidate, just an unbiased fixed subset
-            & ((F.col("a.doc_id") + F.col("b.doc_id")) % 4 == 0)
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-        # pinned: the candidate set feeds BOTH the estimate join and the
-        # exact-intersection join — unpinned, each reference recomputes
-        # the banded self-join + distinct (the dedup_lsh_precision_recall
-        # lesson, PLANS.md)
-        .persist()
-    )
     docs = T(spark, sf_dir, "documents")
+    sig = dd.minhash_signature(docs).persist()
+    # deterministic 1-in-4 pair sample — the sketch-accuracy eval
+    # doesn't need every candidate, just an unbiased fixed subset.
+    # Pinned: the candidate set feeds BOTH the estimate join and the
+    # exact-intersection join — unpinned, each reference recomputes the
+    # banded self-join + distinct (the dedup_lsh_precision_recall
+    # lesson, PLANS.md)
+    pairs = dd.banded_pairs(
+        dd.minhash_bands(sig), (F.col("a.doc_id") + F.col("b.doc_id")) % 4 == 0
+    ).persist()
     toks = docs.select(
         "doc_id", F.array_distinct(tx.tokenize(F.col("text"))).alias("toks")
     )
@@ -8761,7 +8543,7 @@ def minhash_estimate_error(spark, sf_dir):
     sb = side.alias("sb")
     agree = sum(
         F.when(F.col(f"sa.m{i}") == F.col(f"sb.m{i}"), 1).otherwise(0)
-        for i in range(_NUM_MINHASH)
+        for i in range(NUM_MINHASH)
     )
     scored = (
         pairs.join(sa, F.col("sa.doc_id") == F.col("id_a"))
@@ -10400,7 +10182,7 @@ def orders_pareto_abc(spark, sf_dir):
 
 
 def _method_agreement_sql() -> str:
-    bands, width = _MINHASH_BANDS, _NUM_MINHASH // _MINHASH_BANDS
+    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
     band_hashes = [
         f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
         for b in range(bands)
@@ -10448,15 +10230,10 @@ def dedup_method_agreement(spark, sf_dir):
     all-pairs); the intersection is a pair-key equi-join; one division
     at the end, integer floor. Uses the portable md5 variants so the
     oracle reproduces every pair bit-for-bit."""
-    banded = _banded_df(spark, sf_dir).persist()  # one signature agg, both join sides
-    mhp = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bh"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    sh = dedup_simhash(spark, sf_dir)
+    docs = T(spark, sf_dir, "documents")
+    # persist: one signature agg feeds both join sides
+    mhp = dd.banded_pairs(dd.minhash_bands(dd.minhash_signature(docs)).persist())
+    sh = dd.simhash16(docs)
     bandse = F.array(
         F.struct(F.lit(0).alias("band"), (F.col("simhash16") % 256).alias("bh")),
         F.struct(
@@ -10473,20 +10250,8 @@ def dedup_method_agreement(spark, sf_dir):
     shb = sh.select("doc_id", "simhash16", F.explode(bandse).alias("e")).select(
         "doc_id", "simhash16", F.col("e.band").alias("band"), F.col("e.bh").alias("bh")
     ).persist()
-    sa, sb = shb.alias("sa"), shb.alias("sb")
-    shp = (
-        sa.join(sb, ["band", "bh"])
-        .filter(
-            (F.col("sa.doc_id") < F.col("sb.doc_id"))
-            & (
-                F.bit_count(
-                    F.col("sa.simhash16").bitwiseXOR(F.col("sb.simhash16"))
-                )
-                <= 3
-            )
-        )
-        .select(F.col("sa.doc_id").alias("id_a"), F.col("sb.doc_id").alias("id_b"))
-        .distinct()
+    shp = dd.banded_pairs(
+        shb, F.bit_count(F.col("a.simhash16").bitwiseXOR(F.col("b.simhash16"))) <= 3
     )
     mhp = mhp.persist()
     shp = shp.persist()
@@ -10495,7 +10260,11 @@ def dedup_method_agreement(spark, sf_dir):
     n_both = mhp.join(shp, ["id_a", "id_b"]).agg(F.count(F.lit(1)).alias("n_both"))
     c = n_mh.crossJoin(n_sh).crossJoin(n_both)
     uni = F.col("n_minhash") + F.col("n_simhash") - F.col("n_both")
-    agree = (1000 * F.col("n_both") - (1000 * F.col("n_both")) % uni) / uni
+    # no pair from either sketch: NULL, as the oracle's x // 0 (and no
+    # REMAINDER_BY_ZERO under ANSI)
+    agree = F.when(
+        uni > 0, (1000 * F.col("n_both") - (1000 * F.col("n_both")) % uni) / uni
+    )
     return c.select(
         "n_minhash", "n_simhash", "n_both", agree.cast("long").alias("agree_milli")
     )
@@ -11371,8 +11140,6 @@ def entity_resolution_customers(spark, sf_dir):
     (record, label) pairs only, rounds ≈ cluster diameter (1 here).
     At 100 TB the identical plan holds with block keys tuned so the
     largest block fits a task — `dedup_bucket_stats` is the gate."""
-    from gravity_spark.functions.dedup import connected_components
-
     c = T(spark, sf_dir, "customer")
     base = c.select(
         (F.col("c_custkey") * 2).alias("rid"),
@@ -11405,7 +11172,7 @@ def entity_resolution_customers(spark, sf_dir):
         & (F.col("ba") == F.col("bb"))
         & (F.levenshtein(F.col("na"), F.col("nb_")) <= 1)
     )
-    comp = connected_components(
+    comp = dd.connected_components(
         pairs.select(F.col("ra").alias("id_a"), F.col("rb").alias("id_b")),
         recs.select("rid"),
         id_col="rid",
@@ -11531,14 +11298,7 @@ def dedup_cluster_aware_split(spark, sf_dir):
     label propagation, O(docs × bands) edges) plus one hash expression
     and two aggregations over (doc, component) pairs — document
     payloads never move."""
-    from gravity_spark.functions.dedup import connected_components_bipartite
-
-    docs = T(spark, sf_dir, "documents").select("doc_id")
-    membership = _banded_df(spark, sf_dir).select(
-        "doc_id", F.concat_ws("#", F.col("band").cast("string"), "bh").alias("bucket")
-    )
-    singleton = docs.select("doc_id", F.lit(None).cast("string").alias("bucket"))
-    comp = connected_components_bipartite(membership.unionByName(singleton))
+    comp = dd.near_dup_components(T(spark, sf_dir, "documents"))
     hv = _phash_col(F.col("component"))
     split = (
         F.when(hv % 100 < 80, F.lit("train"))
@@ -15653,8 +15413,6 @@ def graph_components_incremental(spark, sf_dir):
     6.5 s for the base loop at 8 vs 32). In production this knob is
     sized to edge volume, exactly like the streaming state-store
     scoping in _stream_conf."""
-    from gravity_spark.functions.dedup import connected_components_bipartite
-
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     orders = T(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"), "o_custkey"
@@ -15679,7 +15437,7 @@ def graph_components_incremental(spark, sf_dir):
                 F.col("ck").alias("doc_id"),
                 F.lit(None).cast("string").alias("bucket"),
             )
-            l1 = connected_components_bipartite(
+            l1 = dd.connected_components_bipartite(
                 base.unionByName(singleton)
             ).select(F.col("doc_id").alias("ck"), F.col("component").alias("lab"))
 
@@ -15692,7 +15450,7 @@ def graph_components_incremental(spark, sf_dir):
                 )
                 .distinct()
             )
-            relabel = connected_components_bipartite(dmemb).select(
+            relabel = dd.connected_components_bipartite(dmemb).select(
                 F.col("doc_id").alias("lab"), F.col("component").alias("newlab")
             )
             out = (

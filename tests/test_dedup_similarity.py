@@ -1,20 +1,20 @@
 from pyspark.sql import functions as F
 
 from gravity_spark.functions.dedup import (
+    NUM_MINHASH,
+    banded_pairs,
     exact_dedup,
-    hamming_distance,
-    minhash_jaccard_estimate,
-    minhash_lsh_pairs,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_pairs,
+    minhash_bands,
+    minhash_signature,
+    simhash16,
+    subblocked_self_join,
 )
 from gravity_spark.functions.similarity import (
     brute_force_topk,
     cosine_similarity,
     lsh_bucket_topk,
 )
+from gravity_spark.functions.text import tokenize
 
 
 def _docs(spark):
@@ -38,51 +38,83 @@ def test_exact_dedup_normalized(spark):
 
 
 def test_minhash_lsh_finds_near_dups(spark):
-    sigs = minhash_signatures(_docs(spark), num_hashes=32)
-    pairs = {
-        (r["id_a"], r["id_b"]) for r in minhash_lsh_pairs(sigs, bands=16).collect()
-    }
-    assert (1, 2) in pairs           # identical token sets always collide
-    assert (1, 4) not in pairs and (2, 4) not in pairs
+    banded = minhash_bands(minhash_signature(_docs(spark)))
+    pairs = {(r["id_a"], r["id_b"]) for r in banded_pairs(banded).collect()}
+    assert (1, 2) in pairs and (5, 6) in pairs  # identical token sets always collide
+    assert all(4 not in p for p in pairs)  # no shared token, no shared minimum
 
 
 def test_minhash_jaccard_estimate(spark):
-    sigs = minhash_signatures(_docs(spark), num_hashes=64)
-    a = sigs.filter(F.col("doc_id") == 1).select(F.col("minhash").alias("ma"))
-    b = sigs.filter(F.col("doc_id") == 2).select(F.col("minhash").alias("mb"))
-    est = (
-        a.crossJoin(b)
-        .select(minhash_jaccard_estimate(F.col("ma"), F.col("mb")).alias("j"))
-        .collect()[0]["j"]
-    )
-    assert est == 1.0  # same token set → identical signatures
+    sig = {r["doc_id"]: r for r in minhash_signature(_docs(spark)).collect()}
+    agree = sum(sig[1][f"m{i}"] == sig[2][f"m{i}"] for i in range(NUM_MINHASH))
+    assert agree / NUM_MINHASH == 1.0  # same token set → identical signatures
 
 
 def test_simhash_hamming(spark):
-    docs = _docs(spark)
-    sh = docs.select("doc_id", simhash(F.col("text")).alias("sh"))
-    a = sh.filter(F.col("doc_id") == 1).select(F.col("sh").alias("sa"))
-    d = sh.filter(F.col("doc_id") == 4).select(F.col("sh").alias("sd"))
-    b = sh.filter(F.col("doc_id") == 2).select(F.col("sh").alias("sb"))
-    near = a.crossJoin(b).select(hamming_distance(F.col("sa"), F.col("sb")).alias("h")).collect()[0]["h"]
-    far = a.crossJoin(d).select(hamming_distance(F.col("sa"), F.col("sd")).alias("h")).collect()[0]["h"]
-    assert near == 0          # identical token multiset
+    sh = {r["doc_id"]: r["simhash16"] for r in simhash16(_docs(spark)).collect()}
+    near = bin(sh[1] ^ sh[2]).count("1")
+    far = bin(sh[1] ^ sh[4]).count("1")
+    assert near == 0  # identical token set
     assert far > near
 
 
 def test_simhash_pairs(spark):
-    pairs = {(r["id_a"], r["id_b"]) for r in simhash_pairs(_docs(spark), max_hamming=5).collect()}
+    # dedup_method_agreement's banding: two 8-bit bands, hamming <= 3 verify
+    sh = simhash16(_docs(spark))
+    bands = F.array(
+        F.struct(F.lit(0).alias("band"), (F.col("simhash16") % 256).alias("bh")),
+        F.struct(F.lit(1).alias("band"), F.expr("simhash16 div 256").alias("bh")),
+    )
+    shb = sh.select("doc_id", "simhash16", F.explode(bands).alias("e")).select(
+        "doc_id", "simhash16", "e.band", "e.bh"
+    )
+    near = F.bit_count(F.col("a.simhash16").bitwiseXOR(F.col("b.simhash16"))) <= 3
+    pairs = {(r["id_a"], r["id_b"]) for r in banded_pairs(shb, near).collect()}
     assert (1, 2) in pairs
     assert (5, 6) in pairs
 
 
 def test_ngram_jaccard_pairs_blocked(spark):
-    pairs = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(_docs(spark), n=2, threshold=0.5, group_col="source").collect()
-    }
+    g = _docs(spark).select(
+        "doc_id", "source", F.array_distinct(tokenize(F.col("text"))).alias("toks")
+    )
+    inter = F.size(F.array_intersect("a.toks", "b.toks"))
+    union = F.size(F.array_union("a.toks", "b.toks"))
+    joined = subblocked_self_join(g, "source").select(
+        F.col("a.doc_id").alias("id_a"),
+        F.col("b.doc_id").alias("id_b"),
+        (inter / union).alias("jaccard"),
+    )
+    every = {(r["id_a"], r["id_b"]): r["jaccard"] for r in joined.collect()}
+    # the sub-blocks partition the pair set: each same-source pair once
+    assert sorted(every) == [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6)]
+    pairs = {k: v for k, v in every.items() if v >= 0.5}
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
     assert all(a != 4 and b != 4 for a, b in pairs)  # different content filtered
+
+
+def test_minhash_signature_stream_matches_batch(spark, tmp_path):
+    """The signature picks its physical form from ``isStreaming``; both
+    forms must give the same bands and both drop a doc with no tokens."""
+    docs = _docs(spark).select("doc_id", "text").unionByName(
+        spark.createDataFrame([(7, "?! ..."), (8, "")], "doc_id long, text string")
+    )
+    docs.coalesce(1).write.json(str(tmp_path / "in"))
+    batch = sorted(minhash_bands(minhash_signature(docs)).collect())
+    stream = spark.readStream.schema("doc_id long, text string").json(str(tmp_path / "in"))
+    assert stream.isStreaming
+    q = (
+        minhash_bands(minhash_signature(stream))
+        .writeStream.format("memory")
+        .queryName("mh_stream_vs_batch")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    streamed = sorted(spark.table("mh_stream_vs_batch").collect())
+    assert streamed == batch
+    assert {r["doc_id"] for r in batch} == {1, 2, 3, 4, 5, 6}
 
 
 def _vectors(spark):
@@ -410,3 +442,40 @@ def test_lsh_precision_recall_truth_subblock_identical(spark):
                     n += 1
         naive[src] = n
     assert {s: out[s] for s in naive} == naive
+
+
+def test_method_agreement_without_candidate_pairs(spark, tmp_path):
+    """Two unrelated docs: neither sketch yields a pair, so the
+    agreement ratio is 0/0. The oracle answers NULL; the Spark side
+    must too, not raise REMAINDER_BY_ZERO under ANSI mode."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gravity_spark.queries import REGISTRY
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "spark shuffles partitions across executors every night",
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([1, 2], pa.int64()),
+                "text": texts,
+                "lang": ["en", "en"],
+                "source": ["a", "a"],
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    q = REGISTRY["dedup_method_agreement"]
+    got = [tuple(r) for r in q.spark(spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    want = con.execute(q.oracle).fetchall()
+    assert got == want == [(0, 0, 0, None)]

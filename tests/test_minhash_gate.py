@@ -8,7 +8,7 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
-from gravity_spark.queries import _banded_row_local
+from gravity_spark.functions.dedup import minhash_bands, minhash_signature
 from gravity_spark.streaming.windows import minhash_bucket_gate
 
 
@@ -38,7 +38,9 @@ def test_gate_rejects_cross_batch_near_dup(spark, tmp_path, salt):
     # salt=None: per-bucket state keys (scale path); salt=1024: the
     # default coarse sharding; salt=3: forces many buckets per salt
     # key, exercising the in-handler regroup
-    gate = minhash_bucket_gate(_banded_row_local(stream), salt_buckets=salt)
+    gate = minhash_bucket_gate(
+        minhash_bands(minhash_signature(stream)), salt_buckets=salt
+    )
     verdicts = {}
 
     def handle(df, epoch_id):
@@ -83,10 +85,10 @@ def test_salted_state_value_bounded_at_bench_corpus(spark):
     sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if not os.path.isdir(sf):
         _pytest.skip(f"bench corpus {sf} not present")
-    from gravity_spark.queries import T, _banded_row_local
+    from gravity_spark.queries import T
 
     docs = T(spark, sf, "documents").select("doc_id", "text")
-    keyed = _banded_row_local(docs).withColumn(
+    keyed = minhash_bands(minhash_signature(docs)).withColumn(
         "gk", F.pmod(F.xxhash64("band", "bh"), F.lit(1024))
     )
     per_bucket = keyed.groupBy("gk", "band", "bh").agg(F.min("doc_id").alias("mid"))

@@ -108,39 +108,13 @@ def run_one(spark: SparkSession, sf_dir: str, mult: int) -> dict:
     out: dict = {"mult": mult, "docs": n_docs}
 
     # --- stage 1: signatures + banding --------------------------------
-    # the PRODUCTION signature shape (queries._sig_df / _banded_df):
-    # explode word tokens → md5 → per-doc min of rotated hashes — one
-    # vectorized shuffle on doc_id, no per-row HOF nest. (The char-
-    # shingle HOF variant in functions/dedup.py is ~100× slower per doc
-    # and exists for API parity; the corpus queries all use this path.)
-    from gravity_spark.queries import _MINHASH_BANDS, _NUM_MINHASH, _rot_col
-
-    width = _NUM_MINHASH // _MINHASH_BANDS
+    # the graded signature (dedup_minhash_signature / _pairs /
+    # _components): explode word tokens → md5 → per-doc min of rotated
+    # hashes — one shuffle on doc_id — then two md5 bands per doc
     sw0, t0 = shuffle_write_bytes(spark), time.time()
-    tok = corpus.select(
-        "doc_id", F.explode(F.array_distinct(tokenize(F.col("text")))).alias("t")
-    ).select("doc_id", F.md5("t").alias("h"))
-    sig = tok.groupBy("doc_id").agg(
-        *[F.min(_rot_col(i)).alias(f"m{i}") for i in range(_NUM_MINHASH)]
-    )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat(*[F.col(f"m{i}") for i in range(b * width, (b + 1) * width)])
-                ).alias("bh"),
-            )
-            for b in range(_MINHASH_BANDS)
-        ]
-    )
-    members = (
-        sig.select("doc_id", F.explode(band_structs).alias("e"))
-        .select(
-            "doc_id",
-            F.concat(F.col("e.band"), F.lit("#"), F.col("e.bh")).alias("bucket"),
-        )
-        .persist()
+    banded = D.minhash_bands(D.minhash_signature(corpus)).persist()
+    members = banded.select(
+        "doc_id", F.concat(F.col("band"), F.lit("#"), F.col("bh")).alias("bucket")
     )
     n_members = members.count()
     t1, sw1 = time.time(), shuffle_write_bytes(spark)
@@ -166,13 +140,7 @@ def run_one(spark: SparkSession, sf_dir: str, mult: int) -> dict:
 
     # --- stage 2: candidate pair join ---------------------------------
     sw0, t0 = shuffle_write_bytes(spark), time.time()
-    a, b = members.alias("a"), members.alias("b")
-    pairs = (
-        a.join(b, "bucket")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
+    pairs = D.banded_pairs(banded)
     n_pairs = pairs.count()
     t1, sw1 = time.time(), shuffle_write_bytes(spark)
     out["pairs"] = {
@@ -195,7 +163,7 @@ def run_one(spark: SparkSession, sf_dir: str, mult: int) -> dict:
         "docs_per_sec": round(n_docs / (t1 - t0), 1),
         "shuffle_mb": round((sw1 - sw0) / 1e6, 1) if sw1 >= 0 else None,
     }
-    members.unpersist()
+    banded.unpersist()
     return out
 
 

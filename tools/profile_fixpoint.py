@@ -17,7 +17,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    from gravity_spark.queries import _dedup_component_labels
+    from gravity_spark.functions.dedup import near_dup_components
+    from gravity_spark.queries import T
     from gravity_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -30,9 +31,9 @@ def main() -> None:
     for it in range(n_runs):
         j0 = sc._jsc.sc().dagScheduler().nextJobId()
         t0 = time.time()
-        _dedup_component_labels(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        near_dup_components(T(spark, sf_dir, "documents")).write.format(
+            "noop"
+        ).mode("overwrite").save()
         dt = time.time() - t0
         j1 = sc._jsc.sc().dagScheduler().nextJobId()
         n_stages = 0

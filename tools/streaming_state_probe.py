@@ -168,7 +168,8 @@ def probe_rate_limit(spark, sf_dir: str, mult: int, epochs: int = 4) -> dict:
 
 
 def probe_mh_gate(spark, sf_dir: str, mult: int, epochs: int = 3) -> dict:
-    from gravity_spark.queries import T, _banded_row_local
+    from gravity_spark.functions.dedup import minhash_bands, minhash_signature
+    from gravity_spark.queries import T
     from gravity_spark.streaming.windows import minhash_bucket_gate
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
@@ -180,7 +181,8 @@ def probe_mh_gate(spark, sf_dir: str, mult: int, epochs: int = 3) -> dict:
     docs = docs.persist()
     n_docs = docs.count()
     # predicted state size: distinct (band, bucket) of the batch banding
-    n_buckets = _banded_row_local(docs).select("band", "bh").distinct().count()
+    banded = minhash_bands(minhash_signature(docs))
+    n_buckets = banded.select("band", "bh").distinct().count()
     hi = docs.agg(F.max("doc_id")).collect()[0][0] + 1
     step = (hi // epochs) + 1
     parts = [
@@ -201,7 +203,8 @@ def probe_mh_gate(spark, sf_dir: str, mult: int, epochs: int = 3) -> dict:
         # scale path (salt_buckets=None): one state cell per occupied
         # bucket — the per-key law this probe was written to measure
         q = _run_noop(
-            minhash_bucket_gate(_banded_row_local(stream), salt_buckets=None), tmp
+            minhash_bucket_gate(minhash_bands(minhash_signature(stream)), salt_buckets=None),
+            tmp,
         )
         rows = _epoch_rows(q)
         # salted fast path: state rows = occupied salt keys, bounded by
@@ -214,7 +217,9 @@ def probe_mh_gate(spark, sf_dir: str, mult: int, epochs: int = 3) -> dict:
                 .json(stream_dir)
             )
             q2 = _run_noop(
-                minhash_bucket_gate(_banded_row_local(stream2), salt_buckets=1024),
+                minhash_bucket_gate(
+                    minhash_bands(minhash_signature(stream2)), salt_buckets=1024
+                ),
                 tmp2,
             )
             rows_salted = _epoch_rows(q2)
