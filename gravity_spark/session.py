@@ -39,6 +39,25 @@ def get_spark(app_name: str = "gravity_spark", cpus: int | None = None) -> Spark
         # branch
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        # Stream checkpoints (offset WAL, commit log, one state-store
+        # file per partition per epoch) go through Spark's FileSystem-
+        # based manager instead of the default FileContext one. Without
+        # libhadoop (the NativeCodeLoader warning at start-up) Hadoop's
+        # local filesystem forks a shell command to set a permission
+        # (`chmod`, for every directory it creates) or to read one
+        # (RawLocalFileSystem -> Shell.execCommand), which makes every
+        # checkpoint file cost milliseconds: one createAtomic + close
+        # measured 32-40 ms through FileContext against 9-18 ms through
+        # FileSystem (4-core host, tmpfs and local disk). Both managers
+        # write a temp file and rename it into place without fsync, and
+        # a rename within one POSIX local filesystem is atomic, so a
+        # reader sees the old file or the new one, never a torn one,
+        # either way.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
     )
     if os.path.isdir("/dev/shm"):

@@ -26,3 +26,15 @@ def test_restores_on_exception(spark):
         with _stream_conf(spark, partitions=5):
             raise RuntimeError("body failed")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before_parts
+
+
+def test_default_partitions_track_cores(spark):
+    before_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    cores = str(spark.sparkContext.defaultParallelism)
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        with _stream_conf(spark):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == cores
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", before_parts)

@@ -107,6 +107,8 @@ def input_records(spark, fn) -> int:
     """Records read from data sources by the Spark jobs ``fn`` runs,
     summed over their stages in Spark's status store (jobs found by job
     group, so other threads' jobs are not counted)."""
+    from py4j.protocol import Py4JJavaError
+
     sc = spark.sparkContext
     group = f"input_records_{next(_groups)}"
     sc.setJobGroup(group, "input record count")
@@ -119,9 +121,26 @@ def input_records(spark, fn) -> int:
     store = jsc.statusStore()
     total = 0
     for job in sc.statusTracker().getJobIdsForGroup(group):
-        ids = store.job(job).stageIds()
+        data = store.job(job)
+        ids = data.stageIds()
+        missing = 0
         for i in range(ids.size()):
-            total += store.lastStageAttempt(ids.apply(i)).inputRecords()
+            try:
+                total += store.lastStageAttempt(ids.apply(i)).inputRecords()
+            except Py4JJavaError as e:
+                if "NoSuchElementException" not in e.java_exception.getClass().getName():
+                    raise
+                missing += 1
+        # Past spark.ui.retainedStages the store evicts skipped stages
+        # first (under AQE a job's earlier shuffle stages show as
+        # skipped); they read nothing. A stage that ran goes only after
+        # every skipped one, so more missing stages than skipped ones
+        # means records went uncounted.
+        if missing > data.numSkippedStages():
+            raise RuntimeError(
+                f"job {job}: {missing} stages evicted from the status store, "
+                f"only {data.numSkippedStages()} skipped; input records unknown"
+            )
     return total
 
 
