@@ -52,9 +52,12 @@ def _stream_conf(spark, partitions: int | None = None, extra: dict | None = None
     even in an empty batch, so more stores than cores only queue that
     cost: streaming_sliding_window_counts at sf0.1 on 4 cores took a
     median 1.40 s with 8 stores against 1.12 s with 4. An explicit
-    ``partitions`` wins. The stream runs to completion inside the
-    query function (availableNow + awaitTermination), so the conf is
-    restored before returning. At production scale this knob is
+    ``partitions`` wins. Every registry stream runs to completion
+    inside ``_run_available_now``, which starts it under this scope,
+    so the conf is restored before the query function returns;
+    ``streaming_cdc_pipeline`` (the library's ``run_stream``) and
+    ``graph_components_incremental`` (a batch query sizing its
+    shuffles) enter it directly. At production scale this knob is
     sized to state volume, not left at the session default. ``extra``
     scopes additional session confs the same way (e.g. a small
     maxPartitionBytes so a one-file micro-batch still fans out across
@@ -100,60 +103,139 @@ def _scratch_dir(prefix: str) -> str:
     return d
 
 
-def _one_part_file(pattern: str) -> str:
-    """The single part file a one-task write produced, with a clear
-    error instead of IndexError when a wave came out EMPTY (an empty
-    wave produces no w=<idx> directory at all — latent at bench scales,
-    where every wave is non-empty, but a hard crash on a skewed split
-    otherwise; r10 advisor item)."""
+def _events_stream(spark, sf_dir: str) -> DataFrame:
+    """``events`` of ``sf_dir`` as a file stream: the events parquet is
+    the only file the source admits, its schema is the loader's pinned
+    one, and ``ts`` is normalized as a batch read of ``T()`` would be
+    (so ``withWatermark`` can take it). Sets the same session confs as
+    ``T()``."""
+    _pin_session_ts(spark)
+    stream = (
+        spark.readStream.schema(parquet_schema(spark, f"{sf_dir}/events.parquet"))
+        .format("parquet")
+        .option("pathGlobFilter", "events.parquet")
+        .load(sf_dir)
+    )
+    return _normalize_ts(stream)
+
+
+def _wave_stream(spark, df: DataFrame, wave, n: int) -> DataFrame:
+    """``df`` fed as ``n`` micro-batches: ``wave``, an integer Column
+    over ``df`` valued 0..n-1, names each row's wave, and the returned
+    JSON stream (schema ``df.schema``, one file per trigger) reads wave
+    0 first, then 1, and so on.
+
+    ONE pass writes every wave: repartition by the wave puts each wave
+    in exactly one task, partitionBy gives one file per wave dir (a
+    filtered write per wave scanned and JSON-encoded ``df`` once per
+    wave). The files get mtimes 60 s apart in wave order, which is the
+    order the file source lists them in. Row order within a wave is not
+    fixed; every caller's per-batch logic is order-free. An empty wave
+    writes no file and raises here, not as a short stream."""
     import glob
+    import shutil
 
-    hits = glob.glob(pattern)
-    if not hits:
-        raise RuntimeError(
-            f"no part file matches {pattern!r}: the wave split produced "
-            "an empty wave (no rows on one side of the split point) — "
-            "the stream source needs one non-empty file per wave"
-        )
-    return hits[0]
+    tmp = _scratch_dir("waves_")
+    stream_dir = f"{tmp}/stream"
+    os.makedirs(stream_dir)
+    (
+        df.withColumn("__wave", wave)
+        .repartition("__wave")
+        .write.partitionBy("__wave")
+        .mode("overwrite")
+        .json(f"{tmp}/waves")
+    )
+    for idx in range(n):
+        hits = glob.glob(f"{tmp}/waves/__wave={idx}/part-*.json")
+        if not hits:
+            raise RuntimeError(
+                f"wave {idx} of {n} is empty: the stream source needs one "
+                "non-empty file per wave"
+            )
+        dst = f"{stream_dir}/{idx:03d}.json"
+        shutil.move(hits[0], dst)
+        os.utime(dst, (1700000000 + 60 * idx, 1700000000 + 60 * idx))
+    return (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", "1")
+        .json(stream_dir)
+    )
 
 
-# Micro-batch geometry of the most recent completed stream per query
-# name: {"batches", "data_batches", "nodata_batches"}. Epoch count is
-# measurement geometry — a bench row whose wall time moves because the
-# trigger planned a different number of micro-batches is not a plan
+# Micro-batch geometry of the most recent completed stream, under
+# "__last__": {"batches", "data_batches", "nodata_batches"}. Epoch count
+# is measurement geometry — a bench row whose wall time moves because
+# the trigger planned a different number of micro-batches is not a plan
 # regression (r8 verdict: same row retimed 4.07 vs 9.66 s on healthy
 # brackets). Recording it makes any future drift attributable, and the
 # epoch-geometry pytest assertions read it (tests/test_stream_epochs.py).
 STREAM_GEOMETRY: dict[str, dict] = {}
 
+# A registry stream runs to completion well inside this; a run that does
+# not is hung, and is stopped and raised rather than read half-done.
+_STREAM_TIMEOUT_S = 300
 
-def _await_stream(q, timeout: int = 120) -> None:
+
+def _await_stream(q, timeout: int = _STREAM_TIMEOUT_S) -> None:
     """awaitTermination with the timeout CHECKED: a False return means
-    the availableNow run did not finish, so the memory sink would be
-    read partially populated — silent wrong rows. Stop the query and
-    fail loudly instead (the gate retries nothing; a timeout here is a
-    real problem worth surfacing). Records micro-batch geometry into
-    STREAM_GEOMETRY keyed by the query's name prefix (the part before
-    the uuid suffix) so callers/tests can assert epoch counts."""
+    the availableNow run did not finish, so the sink would be read
+    partially populated — silent wrong rows. Stop the query and fail
+    loudly instead (the gate retries nothing; a timeout here is a real
+    problem worth surfacing). Records micro-batch geometry into
+    ``STREAM_GEOMETRY["__last__"]`` so tests can assert epoch counts.
+    Called by ``_run_available_now`` (every registry stream) and by
+    ``streaming_cdc_pipeline``, whose stream the library starts."""
     if not q.awaitTermination(timeout):
         q.stop()
         raise RuntimeError(f"stream {q.name or q.id} timed out after {timeout}s")
     try:
         prog = q.recentProgress
         data = sum(1 for p in prog if int(p.get("numInputRows", 0)) > 0)
-        key = (q.name or str(q.id)).rsplit("_", 1)[0]
-        geom = {
+        STREAM_GEOMETRY["__last__"] = {
             "batches": len(prog),
             "data_batches": data,
             "nodata_batches": len(prog) - data,
         }
-        STREAM_GEOMETRY[key] = geom
-        # unnamed streams (foreachBatch sinks) are reachable via the
-        # well-known slot — tests clear the dict, run one query, read this
-        STREAM_GEOMETRY["__last__"] = geom
     except Exception:
         pass  # geometry is diagnostics — never fail the query over it
+
+
+def _run_available_now(
+    spark,
+    frame: DataFrame,
+    mode: str = "append",
+    each_batch: Callable[[DataFrame, int], None] | None = None,
+    scratch: str | None = None,
+    extra: dict | None = None,
+) -> DataFrame | None:
+    """Run the stream ``frame`` to the end of its input (availableNow)
+    in output mode ``mode``, under ``_stream_conf(spark, extra=extra)``,
+    and wait for it through ``_await_stream``.
+
+    Without ``each_batch`` the sink is an in-memory table, and its rows
+    are returned. The table's view is dropped before returning, also
+    when the run fails: the returned frame keeps the rows reachable for
+    as long as the caller holds it, while the session's catalog keeps
+    nothing. With ``each_batch`` every micro-batch goes to it
+    (foreachBatch), the checkpoint lives under ``scratch``, and None is
+    returned."""
+    import uuid
+
+    writer = frame.writeStream.outputMode(mode).trigger(availableNow=True)
+    if each_batch is None:
+        name = f"stream_{uuid.uuid4().hex}"
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(each_batch).option(
+            "checkpointLocation", f"{scratch}/ckpt"
+        )
+    try:
+        with _stream_conf(spark, extra=extra):
+            _await_stream(writer.start())
+        return None if each_batch is not None else spark.table(name)
+    finally:
+        if each_batch is None:
+            spark.catalog.dropTempView(name)
 
 
 @dataclass
@@ -201,15 +283,20 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def _pin_session_ts(spark: SparkSession) -> None:
+    """The session confs every registry table read sets (``T()`` and
+    ``_events_stream``). The driver's own session won't carry them, so
+    they are set here so nano-timestamp parquet (events.ts) loads and
+    epoch math matches the (TZ-naive) DuckDB oracle under any session."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Table ``name`` of ``sf_dir`` with its schema pinned by the loader:
     the footers are inferred once per file version, so every later call
     builds its DataFrame without a Spark job."""
-    # the driver's own session won't carry these configs — set them here
-    # so nano-timestamp parquet (events.ts) loads and epoch math matches
-    # the (TZ-naive) DuckDB oracle under any session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_session_ts(spark)
     return _normalize_ts(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
 
 
@@ -4737,38 +4824,14 @@ def streaming_window_counts(spark, sf_dir):
     a tumbling-window count into a memory sink, then return the result.
     The oracle checks the windowed aggregation against batch SQL —
     stream/batch parity is exactly Structured Streaming's contract."""
-    import uuid
-
     from gravity_spark.streaming.windows import streaming_window_counts as swc
 
-    name = f"swc_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # RAW parquet schema (ts as long nanos) — the stream converts after read
-    ev_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(ev_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    stream = _normalize_ts(stream)
-    out = swc(stream, window="1 hour")
-    with _stream_conf(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 120)
-    result = spark.table(name).select(
+    out = swc(_events_stream(spark, sf_dir), window="1 hour")
+    return _run_available_now(spark, out, "complete").select(
         F.unix_timestamp(F.col("window.start")).alias("window_epoch"),
         "event_type",
         "n",
     )
-    return result
 
 
 @register(
@@ -4788,22 +4851,11 @@ def streaming_stream_join(spark, sf_dir):
     watermarked and the join carries the time-range condition, so state
     eviction is bounded — the canonical Structured Streaming join shape.
     Oracle = the same join as batch SQL (stream/batch parity)."""
-    import uuid
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
 
     def side(event_type, prefix):
-        s = (
-            spark.readStream.schema(raw_schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
-        s = _normalize_ts(s)
         return (
-            s.filter(F.col("event_type") == event_type)
+            _events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
                 F.col("user_id").alias(f"{prefix}_user"),
@@ -4820,7 +4872,6 @@ def streaming_stream_join(spark, sf_dir):
         & (F.col("buy_ts") >= F.col("click_ts"))
         & (F.col("buy_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
     )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
     # No-data micro-batches are disabled for THIS query only: an
     # append-mode INNER stream-stream join emits exclusively in data
     # batches (the trailing no-data batch only evicts state, and the
@@ -4831,19 +4882,12 @@ def streaming_stream_join(spark, sf_dir):
     # min-of-3) and its cost varied with state-store scan scheduling —
     # the bimodal geometry the r8 verdict flagged. OUTER joins must NOT
     # do this: their null-side flush happens in the no-data batch.
-    with _stream_conf(
+    rows = _run_available_now(
         spark,
+        joined,
         extra={"spark.sql.streaming.noDataMicroBatches.enabled": "false"},
-    ):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 120)
-    return spark.table(name).select(
+    )
+    return rows.select(
         "click_id",
         F.col("buy_id").alias("buy_id"),
         F.col("click_user").alias("user_id"),
@@ -4881,22 +4925,11 @@ def streaming_stream_outer_join(spark, sf_dir):
     excluded on both engines — their null-emission depends on where the
     final watermark lands, the documented outer-join boundary — so the
     graded region is exactly the deterministically-flushed one."""
-    import uuid
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
 
     def side(event_type, prefix):
-        s = (
-            spark.readStream.schema(raw_schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
-        s = _normalize_ts(s)
         return (
-            s.filter(F.col("event_type") == event_type)
+            _events_stream(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
             .select(
                 F.col("event_id").alias(f"{prefix}_id"),
                 F.col("user_id").alias(f"{prefix}_user"),
@@ -4914,23 +4947,14 @@ def streaming_stream_outer_join(spark, sf_dir):
         & (F.col("buy_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     )
-    name = f"ssoj_{uuid.uuid4().hex[:8]}"
-    with _stream_conf(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 120)
+    rows = _run_available_now(spark, joined)
     cutoff = (
         T(spark, sf_dir, "events")
         .agg(F.max("ts").alias("mx"))
         .select(F.col("mx") - F.expr("INTERVAL 4 HOUR"))
         .collect()[0][0]
     )
-    return spark.table(name).filter(F.col("click_ts") <= F.lit(cutoff)).select(
+    return rows.filter(F.col("click_ts") <= F.lit(cutoff)).select(
         "click_id",
         F.col("buy_id").alias("buy_id"),
         F.col("click_user").alias("user_id"),
@@ -4959,24 +4983,10 @@ def streaming_cdc_pipeline(spark, sf_dir):
     events parquet is streamed, adapted to the envelope, filtered, and
     merged into a ParquetMergeTarget via foreachBatch; the returned
     DataFrame is the final target state read back from disk."""
-    import tempfile
-
-    from gravity_spark.core.envelope import events_to_changes
     from gravity_spark.sinks.parquet_merge import ParquetMergeTarget
     from gravity_spark.streaming.pipeline import run_stream
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    stream = _normalize_ts(stream)
-    changes = events_to_changes(stream)
-
+    changes = events_to_changes(_events_stream(spark, sf_dir))
     tmp = _scratch_dir("cdc_pipe_")
     target = ParquetMergeTarget(spark, f"{tmp}/target", ["user_id"], "user_id long, value double")
 
@@ -4989,8 +4999,7 @@ def streaming_cdc_pipeline(spark, sf_dir):
         )
 
     with _stream_conf(spark):
-        q = run_stream(changes, target, typed, f"{tmp}/ckpt", trigger_once=True)
-        _await_stream(q, 300)
+        _await_stream(run_stream(changes, target, typed, f"{tmp}/ckpt", trigger_once=True))
     return target.read()
 
 
@@ -7003,7 +7012,6 @@ def streaming_incremental_rollup(spark, sf_dir):
     trigger carved. Sums are exact integer micro-units; no float
     accumulation across epochs."""
     import shutil
-    import tempfile
 
     from gravity_spark.sinks.parquet_merge import AggregateRollupTarget
 
@@ -7039,16 +7047,7 @@ def streaming_incremental_rollup(spark, sf_dir):
             )
             target.apply_batch(partial, epoch_id)
 
-        with _stream_conf(spark):
-            q = (
-                stream.writeStream.foreachBatch(per_batch)
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError("incremental rollup stream timed out")
+        _run_available_now(spark, stream, each_batch=per_batch, scratch=tmp)
         # materialize before the temp dir vanishes
         rows = target.read().collect()
         return spark.createDataFrame(
@@ -7080,34 +7079,12 @@ def streaming_sessionize_stateful(spark, sf_dir):
     sidecar filters, SURVEY §2.2). One availableNow trigger ⇒ each user
     emits exactly one update row, which must equal the batch answer —
     stream/batch parity for user-defined state, not just built-ins."""
-    import uuid
-
     from gravity_spark.streaming.windows import sessionize_stateful
 
-    name = f"sss_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(ev_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
+    out = sessionize_stateful(_events_stream(spark, sf_dir), gap_seconds=1800)
+    return _run_available_now(spark, out, "update").select(
+        "user_id", "n_sessions", "n_events"
     )
-    stream = _normalize_ts(stream)
-    out = sessionize_stateful(stream, gap_seconds=1800)
-    with _stream_conf(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("stateful sessionization stream timed out")
-    return spark.table(name).select("user_id", "n_sessions", "n_events")
 
 
 def _gate_sql() -> str:
@@ -7153,42 +7130,13 @@ def streaming_minhash_dedup_gate(spark, sf_dir):
     deployment with millions of occupied buckets should pick
     ``salt_buckets=None`` deliberately (the RocksDB-sharded per-bucket
     path — tradeoff table in minhash_bucket_gate's docstring)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from gravity_spark.streaming.windows import minhash_bucket_gate
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    tmp = _scratch_dir("mh_gate_")
-    stream_dir = f"{tmp}/stream"
-    os.makedirs(stream_dir)
     mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    # ONE pass over documents writes both micro-batch files:
-    # repartition by the wave flag puts each wave in exactly one task,
-    # partitionBy gives one file per wave dir (the old two filtered
-    # coalesce(1) writes JSON-encoded the corpus twice)
-    part_dir = f"{tmp}/waves"
-    (
-        docs.withColumn("w", (F.col("doc_id") > mid).cast("int"))
-        .repartition("w")
-        .write.partitionBy("w")
-        .mode("overwrite")
-        .json(part_dir)
-    )
-    for idx in (0, 1):
-        src = _one_part_file(f"{part_dir}/w={idx}/part-*.json")
-        dst = f"{stream_dir}/{idx:03d}.json"
-        shutil.move(src, dst)
-        os.utime(dst, (1700000000 + idx * 60, 1700000000 + idx * 60))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .json(stream_dir)
-    )
+    stream = _wave_stream(spark, docs, (F.col("doc_id") > mid).cast("int"), 2)
     gate = minhash_bucket_gate(dd.minhash_bands(dd.minhash_signature(stream)))
+    tmp = _scratch_dir("mh_gate_")
     verdict_dir = f"{tmp}/verdict"
 
     def handle(df, epoch_id):
@@ -7206,17 +7154,14 @@ def streaming_minhash_dedup_gate(spark, sf_dir):
     # default, one per core: at sf0.1 on 4 cores, 4 stores ran in a
     # min of 7.70 / 7.29 s against 8.93 / 8.71 s for 8 (two sessions
     # each, 5 runs, order 4-8-8-4).
-    with _stream_conf(spark, extra={"spark.sql.files.maxPartitionBytes": "65536"}):
-        q = (
-            gate.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError("minhash gate stream timed out")
+    _run_available_now(
+        spark,
+        gate,
+        "update",
+        each_batch=handle,
+        scratch=tmp,
+        extra={"spark.sql.files.maxPartitionBytes": "65536"},
+    )
     verdict = spark.read.parquet(verdict_dir)
     return (
         docs.select("doc_id")
@@ -7939,34 +7884,14 @@ def streaming_dedup_watermark(spark, sf_dir):
     unboundedly — at 100 TB/day the state holds one row per distinct
     key within the watermark window, not per event. Oracle = batch
     DISTINCT (stream/batch parity)."""
-    import uuid
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    stream = _normalize_ts(stream)
     deduped = (
-        stream.withWatermark("ts", "40 days")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "40 days")
         .select("user_id", "event_type", "ts")
         .dropDuplicates(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"sdw_{uuid.uuid4().hex[:8]}"
-    with _stream_conf(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 120)
-    return spark.table(name)
+    return _run_available_now(spark, deduped)
 
 
 @register(
@@ -8266,36 +8191,15 @@ def streaming_static_join(spark, sf_dir):
     aggregation order can't perturb the value — exact match with the
     batch oracle. At 100 TB/day the stream side never shuffles for the
     join (broadcast), only the tiny (segment, partial) states move."""
-    import uuid
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    stream = _normalize_ts(stream)
     dim = T(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
-    joined = stream.join(F.broadcast(dim), "user_id")
+    joined = _events_stream(spark, sf_dir).join(F.broadcast(dim), "user_id")
     agg = joined.groupBy("segment").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias("value_cents"),
     )
-    name = f"ssj2_{uuid.uuid4().hex[:8]}"
-    with _stream_conf(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 120)
-    return spark.table(name)
+    return _run_available_now(spark, agg, "complete")
 
 
 @register(
@@ -8842,32 +8746,10 @@ def streaming_topk_trending(spark, sf_dir):
     Scale shape: the streaming agg state is (window, event_type) keyed
     — cardinality windows × types, independent of event volume; the
     rank runs over that already-aggregated state."""
-    import uuid
-
     from gravity_spark.streaming.windows import streaming_window_counts as swc
 
-    name = f"trend_{uuid.uuid4().hex[:8]}"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ev_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(ev_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    stream = _normalize_ts(stream)
-    out = swc(stream, window="1 hour")
-    with _stream_conf(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 120)
-    counts = spark.table(name).select(
+    out = swc(_events_stream(spark, sf_dir), window="1 hour")
+    counts = _run_available_now(spark, out, "complete").select(
         F.unix_timestamp(F.col("window.start")).alias("window_epoch"),
         "event_type",
         "n",
@@ -9679,9 +9561,6 @@ def streaming_scd2_maintain(spark, sf_dir):
     close-open-versions join touches only affected keys; the upsert
     rides the idempotent merge sink keyed on (user_id, seq), so
     redelivery is safe."""
-    import glob
-    import shutil
-
     from gravity_spark.sinks.parquet_merge import ParquetMergeTarget
 
     ev = T(spark, sf_dir, "events")
@@ -9696,30 +9575,11 @@ def streaming_scd2_maintain(spark, sf_dir):
         op.alias("chg_op"),
         F.round("value", 2).alias("value"),
     )
-    tmp = _scratch_dir("scd2_stream_")
-    stream_dir = f"{tmp}/stream"
-    os.makedirs(stream_dir)
     mid = changes.agg(F.max("seq")).collect()[0][0] // 2
-    # ONE pass writes both micro-batch files (the minhash-gate trick):
-    # repartition by the wave flag → one task per wave, partitionBy →
-    # one file per wave dir. The old two filtered coalesce(1) writes
-    # scanned and JSON-encoded the change set twice. Row order within
-    # a wave is irrelevant: the maintain loop windows by (user_id,
-    # seq) and the merge sink collapses by PK.
-    part_dir = f"{tmp}/waves"
-    (
-        changes.withColumn("w", (F.col("seq") > mid).cast("int"))
-        .repartition("w")
-        .write.partitionBy("w")
-        .mode("overwrite")
-        .json(part_dir)
-    )
-    for idx in (0, 1):
-        src = _one_part_file(f"{part_dir}/w={idx}/part-*.json")
-        dst = f"{stream_dir}/{idx:03d}.json"
-        shutil.move(src, dst)
-        os.utime(dst, (1700000000 + idx * 60, 1700000000 + idx * 60))
-
+    # row order within a wave is irrelevant: the maintain loop windows
+    # by (user_id, seq) and the merge sink collapses by PK
+    stream = _wave_stream(spark, changes, (F.col("seq") > mid).cast("int"), 2)
+    tmp = _scratch_dir("scd2_stream_")
     target = ParquetMergeTarget(
         spark, f"{tmp}/target", ["user_id", "seq"],
         "user_id long, seq long, chg_op string, value double, valid_to_seq long",
@@ -9745,19 +9605,7 @@ def streaming_scd2_maintain(spark, sf_dir):
         upserts = closed.unionByName(chained).withColumn("op", F.lit("insert"))
         target.apply_batch(upserts, epoch_id)
 
-    stream = (
-        spark.readStream.schema("user_id long, seq long, chg_op string, value double")
-        .option("maxFilesPerTrigger", "1")
-        .json(stream_dir)
-    )
-    with _stream_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
+    _run_available_now(spark, stream, each_batch=maintain, scratch=tmp)
     t = target.read()
     return t.select(
         "user_id", "seq", F.col("chg_op").alias("op"), "value", "valid_to_seq",
@@ -13332,63 +13180,27 @@ def streaming_late_data_audit(spark, sf_dir):
     Scale shape: the streaming agg keeps one state row per open day
     window — bounded by the watermark horizon regardless of volume;
     the audit join is window-keyed over day-cardinality frames."""
-    import glob
-    import shutil
-    import uuid
-
     ev = T(spark, sf_dir, "events").select(
         "event_id", F.unix_micros(F.col("ts")).alias("ts_us")
     )
     tmin, tmax_us = ev.agg(F.min("ts_us"), F.max("ts_us")).collect()[0]
     cut = (tmin + tmax_us) // 2
 
-    tmp = _scratch_dir("late_audit_")
-    stream_dir = f"{tmp}/stream"
-    os.makedirs(stream_dir)
-    # ONE pass writes all three micro-batch files (the minhash-gate
-    # trick — the old three filtered coalesce(1) writes scanned and
-    # JSON-encoded the events three times). Wave assignment is the same
-    # predicate set; row order within a wave is irrelevant to the
-    # event-time window aggregation.
-    w_flag = (
+    # row order within a wave is irrelevant to the event-time window
+    # aggregation
+    wave = (
         F.when(F.col("event_id") % 2 == 0, F.lit(0))
         .when(F.col("ts_us") > cut, F.lit(1))
         .otherwise(F.lit(2))
     )
-    part_dir = f"{tmp}/waves"
-    (
-        ev.withColumn("w", w_flag)
-        .repartition("w")
-        .write.partitionBy("w")
-        .mode("overwrite")
-        .json(part_dir)
-    )
-    for idx in (0, 1, 2):
-        src = _one_part_file(f"{part_dir}/w={idx}/part-*.json")
-        dst = f"{stream_dir}/{idx:03d}.json"
-        shutil.move(src, dst)
-        os.utime(dst, (1700000000 + idx * 60, 1700000000 + idx * 60))
-
     stream = (
-        spark.readStream.schema("event_id long, ts_us long")
-        .option("maxFilesPerTrigger", "1")
-        .json(stream_dir)
+        _wave_stream(spark, ev, wave, 3)
         .select(F.timestamp_micros(F.col("ts_us")).alias("ts"))
         .withWatermark("ts", "5 days")
         .groupBy(F.window("ts", "1 day").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_admitted"))
     )
-    name = f"lda_{uuid.uuid4().hex[:8]}"
-    with _stream_conf(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 120)
-    admitted = spark.table(name).select(
+    admitted = _run_available_now(spark, stream).select(
         F.unix_timestamp(F.col("w.start")).alias("window_epoch"),
         "n_admitted",
     )
@@ -15097,55 +14909,19 @@ def streaming_rate_limit_stateful(spark, sf_dir):
     Scale shape: state is two BIGINTs per user; per batch each user's
     rows sort locally inside the Arrow group. The recursion lives in
     the ORACLE only — the engine does one pass."""
-    import glob
-    import shutil
-    import uuid
-
     from gravity_spark.streaming.windows import rate_limit_stateful
 
     ev = T(spark, sf_dir, "events").select(
         "user_id", "event_id", F.unix_micros(F.col("ts")).alias("ts_us")
     )
     mid = ev.agg(F.max("event_id")).collect()[0][0] // 2
-
-    tmp = _scratch_dir("ratelimit_")
-    stream_dir = f"{tmp}/stream"
-    os.makedirs(stream_dir)
-    # ONE pass writes both micro-batch files (the minhash-gate trick;
-    # the old two filtered coalesce(1) writes scanned and JSON-encoded
-    # the events twice). Row order within a wave is irrelevant: the
-    # stateful handler sorts each user's rows by (ts_us, event_id).
-    part_dir = f"{tmp}/waves"
-    (
-        ev.withColumn("w", (F.col("event_id") > mid).cast("int"))
-        .repartition("w")
-        .write.partitionBy("w")
-        .mode("overwrite")
-        .json(part_dir)
-    )
-    for idx in (0, 1):
-        src = _one_part_file(f"{part_dir}/w={idx}/part-*.json")
-        dst = f"{stream_dir}/{idx:03d}.json"
-        shutil.move(src, dst)
-        os.utime(dst, (1700000000 + idx * 60, 1700000000 + idx * 60))
-
-    stream = (
-        spark.readStream.schema("user_id long, event_id long, ts_us long")
-        .option("maxFilesPerTrigger", "1")
-        .json(stream_dir)
-    )
+    # row order within a wave is irrelevant: the stateful handler sorts
+    # each user's rows by (ts_us, event_id)
+    stream = _wave_stream(spark, ev, (F.col("event_id") > mid).cast("int"), 2)
     out = rate_limit_stateful(stream, _RL_CAP, _RL_COST)
-    name = f"rls_{uuid.uuid4().hex[:8]}"
-    with _stream_conf(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
-    return spark.table(name).select("user_id", "event_id", "admitted")
+    return _run_available_now(spark, out, "update").select(
+        "user_id", "event_id", "admitted"
+    )
 
 
 @register(
@@ -15284,8 +15060,8 @@ def orders_priority_drift_by_month(spark, sf_dir):
 )
 def cdc_replayed_epoch_idempotent(spark, sf_dir):
     """At-least-once delivery as a GRADED query: the entire change
-    stream is delivered TWICE (epoch 2 is a byte-identical redelivery
-    of epoch 1 — the crash-after-commit-before-ack shape every
+    stream is delivered TWICE (epoch 2 redelivers exactly the change
+    rows of epoch 1 — the crash-after-commit-before-ack shape every
     at-least-once transport produces, reference positions/ack model
     pkg/sliding_window) and the merge sink's final state must still
     equal the single-delivery LWW truth. The restart pytest proves this
@@ -15301,9 +15077,6 @@ def cdc_replayed_epoch_idempotent(spark, sf_dir):
     Scale shape: two foreachBatch merges, each one key-hash shuffle of
     the batch against the current version — redelivery costs one extra
     epoch merge, never a history rescan."""
-    import glob
-    import shutil
-
     from gravity_spark.sinks.parquet_merge import ParquetMergeTarget
 
     ev = T(spark, sf_dir, "events")
@@ -15318,26 +15091,11 @@ def cdc_replayed_epoch_idempotent(spark, sf_dir):
         op.alias("op"),
         F.col("value").cast("double").alias("value"),
     )
+    # every change row goes to both waves: epoch 0, then its redelivery
+    stream = _wave_stream(spark, changes, F.explode(F.array(F.lit(0), F.lit(1))), 2)
     tmp = _scratch_dir("replay_")
-    stream_dir = f"{tmp}/stream"
-    os.makedirs(stream_dir)
-    part = f"{tmp}/w0"
-    changes.coalesce(1).write.mode("overwrite").json(part)
-    src = _one_part_file(f"{part}/part-*.json")
-    for idx in range(2):  # epoch 0 + byte-identical redelivery
-        dst = f"{stream_dir}/{idx:03d}.json"
-        shutil.copyfile(src, dst)
-        os.utime(dst, (1700000000 + idx * 60, 1700000000 + idx * 60))
-
     target = ParquetMergeTarget(
         spark, f"{tmp}/target", ["user_id"], "user_id long, value double"
-    )
-    stream = (
-        spark.readStream.schema(
-            "user_id long, seq long, op string, value double"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .json(stream_dir)
     )
 
     def apply(df, epoch_id):
@@ -15345,14 +15103,7 @@ def cdc_replayed_epoch_idempotent(spark, sf_dir):
             df.select("user_id", "value", "op", "seq"), epoch_id
         )
 
-    with _stream_conf(spark):
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 300)
+    _run_available_now(spark, stream, each_batch=apply, scratch=tmp)
     return target.read().select(
         "user_id", F.round("value", 2).alias("value")
     )
@@ -17054,41 +16805,20 @@ def streaming_sliding_window_counts(spark, sf_dir):
     Scale shape: state = one row per OPEN window (window/slide × the
     watermark horizon per key-space) — the replication factor lives in
     the state keys, not the input stream."""
-    import uuid
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    raw_schema = parquet_schema(spark, f"{sf_dir}/events.parquet")
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    stream = _normalize_ts(stream)
     agg = (
-        stream.withWatermark("ts", "1 hour")
+        _events_stream(spark, sf_dir)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"ssw_{uuid.uuid4().hex[:8]}"
-    with _stream_conf(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_stream(q, 120)
+    rows = _run_available_now(spark, agg)
     cut = (
         T(spark, sf_dir, "events")
         .agg((F.expr("max(unix_timestamp(ts))") - 4 * 3600).alias("c"))
         .collect()[0]["c"]
     )
     return (
-        spark.table(name)
-        .select(F.unix_timestamp(F.col("w.start")).alias("window_epoch"), "n")
+        rows.select(F.unix_timestamp(F.col("w.start")).alias("window_epoch"), "n")
         .filter(F.col("window_epoch") + 7200 <= cut)
     )
 

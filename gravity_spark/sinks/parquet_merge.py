@@ -173,13 +173,25 @@ class _ScopedVersions:
         running stream needs, since each epoch writes new versions).
         Keeps each scope's current version plus ``keep_last - 1``
         predecessors; returns the number of dirs removed. Readers of the
-        current manifest are never affected."""
+        current manifest are never affected.
+
+        A ``p=<value>`` dir the manifest no longer names held a
+        partition whose rows were all deleted. No read reaches its
+        versions (``read_version`` is unpartitioned-only), so all of
+        them go."""
+        floors = {
+            key: current - keep_last
+            for key, current in self._scopes(self._manifest()).items()
+        }
+        for entry in os.listdir(self.path):
+            if entry.startswith("p=") and entry[2:] not in floors:
+                floors[entry[2:]] = math.inf
         removed = 0
-        for key, current in self._scopes(self._manifest()).items():
+        for key, floor in floors.items():
             d = self._scope_dir(key)
             for entry in os.listdir(d):
                 ver = entry[1:]
-                if entry.startswith("v") and ver.isdigit() and int(ver) <= current - keep_last:
+                if entry.startswith("v") and ver.isdigit() and int(ver) <= floor:
                     shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
                     removed += 1
         return removed

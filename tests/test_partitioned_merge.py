@@ -356,6 +356,33 @@ def test_partition_recreated_after_full_delete(spark, tmp_path):
     assert [(r["id"], r["v"]) for r in t.read().collect()] == [(2, "b")]
 
 
+def test_vacuum_reclaims_fully_deleted_partition(spark, tmp_path):
+    """A partition whose rows were all deleted drops out of the
+    manifest; vacuum still removes its version dirs, once."""
+    root = tmp_path / "vd"
+    t = ParquetMergeTarget(
+        spark, str(root), ["id"], "id long, dt string, v string", partition_col="dt",
+    )
+    t.apply_batch(_batch(spark, [(1, "a", "x", "insert", 1),
+                                 (2, "b", "y", "insert", 2)]), epoch_id=0)
+    seq = 3
+    for epoch in range(1, 4):
+        t.apply_batch(_batch(spark, [(2, "b", f"y{epoch}", "update", seq)]), epoch_id=epoch)
+        seq += 1
+    t.apply_batch(_batch(spark, [(1, "a", None, "delete", seq)]), epoch_id=4)
+    for epoch in range(5, 8):
+        seq += 1
+        t.apply_batch(_batch(spark, [(2, "b", f"y{epoch}", "update", seq)]), epoch_id=epoch)
+    assert t.partition_version("a") is None and t.partition_version("b") == 7
+    assert (root / "p=a" / "v1").exists()
+
+    assert t.vacuum(keep_last=1) == 7  # p=a/v1, p=b/v1..v6
+    assert not (root / "p=a" / "v1").exists()
+    assert sorted(os.listdir(root / "p=b")) == ["v7"]
+    assert t.vacuum(keep_last=1) == 0
+    assert [(r["id"], r["v"]) for r in t.read().collect()] == [(2, "y7")]
+
+
 def _listing(root):
     return sorted(
         os.path.relpath(os.path.join(d, f), root)

@@ -1,12 +1,14 @@
-"""Epoch-geometry assertions for the streaming bench rows (r8 verdict
-tasks 2 and 6): a foreachBatch/availableNow query whose micro-batch
-count drifts measures trigger geometry, not compute — the r8 bench
-disagreed with itself 2.4x on `streaming_stream_join` for exactly this
-reason. Every row here pins its EXACT expected geometry, so any future
-trigger-planning change (file-listing order, no-data-batch policy,
-maxFilesPerTrigger behavior) becomes a test failure instead of a bench
-mystery. Geometry is recorded by `queries._await_stream` into
-`queries.STREAM_GEOMETRY` from the terminated query's recentProgress.
+"""Epoch-geometry assertions for every stream the registry runs: a
+foreachBatch/availableNow query whose micro-batch count drifts measures
+trigger geometry, not compute — the r8 bench disagreed with itself 2.4x
+on `streaming_stream_join` for exactly this reason. Every row here pins
+its EXACT expected geometry, so any future trigger-planning change
+(file-listing order, no-data-batch policy, maxFilesPerTrigger behavior)
+becomes a test failure instead of a bench mystery. Each registry stream
+runs through `queries._run_available_now` (the CDC pipeline through the
+library's `run_stream`); both wait in `queries._await_stream`, which
+records the terminated query's geometry from its recentProgress into
+`queries.STREAM_GEOMETRY["__last__"]`.
 """
 
 import pytest
@@ -72,3 +74,38 @@ def test_scd2_maintain_exactly_two_epochs(spark, sf_dir):
     # across the seq midpoint), so the epoch count is semantic here too
     g = _geom(spark, sf_dir, "streaming_scd2_maintain")
     assert g["data_batches"] == 2
+
+
+def test_sessionize_stateful_single_batch(spark, sf_dir):
+    # one events file, one availableNow trigger; no watermark, so no
+    # trailing no-data batch: each user emits its one update row here
+    g = _geom(spark, sf_dir, "streaming_sessionize_stateful")
+    assert g == {"batches": 1, "data_batches": 1, "nodata_batches": 0}
+
+
+def test_minhash_gate_exactly_two_epochs(spark, sf_dir):
+    # 2 doc_id-split files x maxFilesPerTrigger=1: the second epoch's
+    # verdicts depend on the bucket owners the first one stored
+    g = _geom(spark, sf_dir, "streaming_minhash_dedup_gate")
+    assert g == {"batches": 2, "data_batches": 2, "nodata_batches": 0}
+
+
+def test_incremental_rollup_exactly_two_epochs(spark, sf_dir):
+    # 4 files x maxFilesPerTrigger=2: two additive merges, each guarded
+    # by its epoch id
+    g = _geom(spark, sf_dir, "streaming_incremental_rollup")
+    assert g == {"batches": 2, "data_batches": 2, "nodata_batches": 0}
+
+
+def test_rate_limit_exactly_two_epochs(spark, sf_dir):
+    # 2 event_id-split files x maxFilesPerTrigger=1: token state carries
+    # across the epoch boundary
+    g = _geom(spark, sf_dir, "streaming_rate_limit_stateful")
+    assert g == {"batches": 2, "data_batches": 2, "nodata_batches": 0}
+
+
+def test_dedup_watermark_eviction_batch(spark, sf_dir):
+    # one data batch, then the watermark's no-data batch that evicts
+    # the dedup state (append mode emits in the data batch)
+    g = _geom(spark, sf_dir, "streaming_dedup_watermark")
+    assert g == {"batches": 2, "data_batches": 1, "nodata_batches": 1}
