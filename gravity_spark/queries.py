@@ -119,79 +119,100 @@ def _events_stream(spark, sf_dir: str) -> DataFrame:
     return _normalize_ts(stream)
 
 
-def _wave_stream(spark, df: DataFrame, wave, n: int) -> DataFrame:
-    """``df`` fed as ``n`` micro-batches: ``wave``, an integer Column
-    over ``df`` valued 0..n-1, names each row's wave, and the returned
-    JSON stream (schema ``df.schema``, one file per trigger) reads wave
-    0 first, then 1, and so on.
-
-    ONE pass writes every wave: repartition by the wave puts each wave
-    in exactly one task, partitionBy gives one file per wave dir (a
-    filtered write per wave scanned and JSON-encoded ``df`` once per
-    wave). The files get mtimes 60 s apart in wave order, which is the
-    order the file source lists them in. Row order within a wave is not
-    fixed; every caller's per-batch logic is order-free. An empty wave
-    writes no file and raises here, not as a short stream."""
+def _file_stream(spark, schema, parts: list[str], scratch: str) -> DataFrame:
+    """A JSON stream (schema ``schema``) that reads one file per trigger:
+    ``parts`` holds one glob per trigger, in feed order, each matching
+    the JSON part file to feed. The files are placed under
+    ``{scratch}/stream`` with mtimes 60 s apart in feed order, which is
+    the order the file source lists them in. A glob that matches no
+    file (an empty write) raises here, not as a short stream."""
     import glob
     import shutil
 
-    tmp = _scratch_dir("waves_")
-    stream_dir = f"{tmp}/stream"
-    os.makedirs(stream_dir)
-    (
-        df.withColumn("__wave", wave)
-        .repartition("__wave")
-        .write.partitionBy("__wave")
-        .mode("overwrite")
-        .json(f"{tmp}/waves")
-    )
-    for idx in range(n):
-        hits = glob.glob(f"{tmp}/waves/__wave={idx}/part-*.json")
+    files = []
+    for idx, pattern in enumerate(parts):
+        hits = glob.glob(pattern)
         if not hits:
             raise RuntimeError(
-                f"wave {idx} of {n} is empty: the stream source needs one "
-                "non-empty file per wave"
+                f"input {idx} of {len(parts)} is empty: the stream source "
+                "needs one non-empty file per trigger"
             )
+        files.append(hits[0])
+    stream_dir = f"{scratch}/stream"
+    os.makedirs(stream_dir)
+    for idx, src in enumerate(files):
         dst = f"{stream_dir}/{idx:03d}.json"
-        shutil.move(hits[0], dst)
+        # a file fed again later (a redelivery) is copied; its last
+        # feed moves it
+        (shutil.copyfile if src in files[idx + 1 :] else shutil.move)(src, dst)
         os.utime(dst, (1700000000 + 60 * idx, 1700000000 + 60 * idx))
     return (
-        spark.readStream.schema(df.schema)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .json(stream_dir)
     )
 
 
-# Micro-batch geometry of the most recent completed stream, under
-# "__last__": {"batches", "data_batches", "nodata_batches"}. Epoch count
-# is measurement geometry — a bench row whose wall time moves because
-# the trigger planned a different number of micro-batches is not a plan
+def _wave_stream(spark, df: DataFrame, wave, n: int, scratch: str) -> DataFrame:
+    """``df`` fed as ``n`` micro-batches: ``wave``, an integer Column
+    over ``df`` valued 0..n-1, names each row's wave, and the returned
+    ``_file_stream`` (schema ``df.schema``) reads wave 0 first, then 1,
+    and so on. The files live under the caller's ``scratch`` dir.
+
+    ONE pass writes every wave: repartition by the wave puts each wave
+    in exactly one task, partitionBy gives one file per wave dir (a
+    filtered write per wave scanned and JSON-encoded ``df`` once per
+    wave). Row order within a wave is not fixed; every caller's
+    per-batch logic is order-free. An empty wave writes no file and
+    raises."""
+    (
+        df.withColumn("__wave", wave)
+        .repartition("__wave")
+        .write.partitionBy("__wave")
+        .mode("overwrite")
+        .json(f"{scratch}/waves")
+    )
+    return _file_stream(
+        spark,
+        df.schema,
+        [f"{scratch}/waves/__wave={idx}/part-*.json" for idx in range(n)],
+        scratch,
+    )
+
+
+# Micro-batch geometry of the most recent completed stream:
+# {"batches", "data_batches", "nodata_batches"}. Epoch count is
+# measurement geometry — a bench row whose wall time moves because the
+# trigger planned a different number of micro-batches is not a plan
 # regression (r8 verdict: same row retimed 4.07 vs 9.66 s on healthy
 # brackets). Recording it makes any future drift attributable, and the
 # epoch-geometry pytest assertions read it (tests/test_stream_epochs.py).
-STREAM_GEOMETRY: dict[str, dict] = {}
+LAST_STREAM_GEOMETRY: dict | None = None
 
 # A registry stream runs to completion well inside this; a run that does
 # not is hung, and is stopped and raised rather than read half-done.
 _STREAM_TIMEOUT_S = 300
 
 
-def _await_stream(q, timeout: int = _STREAM_TIMEOUT_S) -> None:
+def _await_stream(q) -> None:
     """awaitTermination with the timeout CHECKED: a False return means
     the availableNow run did not finish, so the sink would be read
     partially populated — silent wrong rows. Stop the query and fail
     loudly instead (the gate retries nothing; a timeout here is a real
     problem worth surfacing). Records micro-batch geometry into
-    ``STREAM_GEOMETRY["__last__"]`` so tests can assert epoch counts.
+    ``LAST_STREAM_GEOMETRY`` so tests can assert epoch counts.
     Called by ``_run_available_now`` (every registry stream) and by
     ``streaming_cdc_pipeline``, whose stream the library starts."""
-    if not q.awaitTermination(timeout):
+    global LAST_STREAM_GEOMETRY
+    if not q.awaitTermination(_STREAM_TIMEOUT_S):
         q.stop()
-        raise RuntimeError(f"stream {q.name or q.id} timed out after {timeout}s")
+        raise RuntimeError(
+            f"stream {q.name or q.id} timed out after {_STREAM_TIMEOUT_S}s"
+        )
     try:
         prog = q.recentProgress
         data = sum(1 for p in prog if int(p.get("numInputRows", 0)) > 0)
-        STREAM_GEOMETRY["__last__"] = {
+        LAST_STREAM_GEOMETRY = {
             "batches": len(prog),
             "data_batches": data,
             "nodata_batches": len(prog) - data,
@@ -7134,9 +7155,9 @@ def streaming_minhash_dedup_gate(spark, sf_dir):
 
     docs = T(spark, sf_dir, "documents").select("doc_id", "text")
     mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-    stream = _wave_stream(spark, docs, (F.col("doc_id") > mid).cast("int"), 2)
-    gate = minhash_bucket_gate(dd.minhash_bands(dd.minhash_signature(stream)))
     tmp = _scratch_dir("mh_gate_")
+    stream = _wave_stream(spark, docs, (F.col("doc_id") > mid).cast("int"), 2, tmp)
+    gate = minhash_bucket_gate(dd.minhash_bands(dd.minhash_signature(stream)))
     verdict_dir = f"{tmp}/verdict"
 
     def handle(df, epoch_id):
@@ -9578,8 +9599,8 @@ def streaming_scd2_maintain(spark, sf_dir):
     mid = changes.agg(F.max("seq")).collect()[0][0] // 2
     # row order within a wave is irrelevant: the maintain loop windows
     # by (user_id, seq) and the merge sink collapses by PK
-    stream = _wave_stream(spark, changes, (F.col("seq") > mid).cast("int"), 2)
     tmp = _scratch_dir("scd2_stream_")
+    stream = _wave_stream(spark, changes, (F.col("seq") > mid).cast("int"), 2, tmp)
     target = ParquetMergeTarget(
         spark, f"{tmp}/target", ["user_id", "seq"],
         "user_id long, seq long, chg_op string, value double, valid_to_seq long",
@@ -13194,7 +13215,7 @@ def streaming_late_data_audit(spark, sf_dir):
         .otherwise(F.lit(2))
     )
     stream = (
-        _wave_stream(spark, ev, wave, 3)
+        _wave_stream(spark, ev, wave, 3, _scratch_dir("late_audit_"))
         .select(F.timestamp_micros(F.col("ts_us")).alias("ts"))
         .withWatermark("ts", "5 days")
         .groupBy(F.window("ts", "1 day").alias("w"))
@@ -14917,7 +14938,9 @@ def streaming_rate_limit_stateful(spark, sf_dir):
     mid = ev.agg(F.max("event_id")).collect()[0][0] // 2
     # row order within a wave is irrelevant: the stateful handler sorts
     # each user's rows by (ts_us, event_id)
-    stream = _wave_stream(spark, ev, (F.col("event_id") > mid).cast("int"), 2)
+    stream = _wave_stream(
+        spark, ev, (F.col("event_id") > mid).cast("int"), 2, _scratch_dir("rate_limit_")
+    )
     out = rate_limit_stateful(stream, _RL_CAP, _RL_COST)
     return _run_available_now(spark, out, "update").select(
         "user_id", "event_id", "admitted"
@@ -15060,8 +15083,8 @@ def orders_priority_drift_by_month(spark, sf_dir):
 )
 def cdc_replayed_epoch_idempotent(spark, sf_dir):
     """At-least-once delivery as a GRADED query: the entire change
-    stream is delivered TWICE (epoch 2 redelivers exactly the change
-    rows of epoch 1 — the crash-after-commit-before-ack shape every
+    stream is delivered TWICE (epoch 2 is a byte-identical redelivery
+    of epoch 1 — the crash-after-commit-before-ack shape every
     at-least-once transport produces, reference positions/ack model
     pkg/sliding_window) and the merge sink's final state must still
     equal the single-delivery LWW truth. The restart pytest proves this
@@ -15091,9 +15114,10 @@ def cdc_replayed_epoch_idempotent(spark, sf_dir):
         op.alias("op"),
         F.col("value").cast("double").alias("value"),
     )
-    # every change row goes to both waves: epoch 0, then its redelivery
-    stream = _wave_stream(spark, changes, F.explode(F.array(F.lit(0), F.lit(1))), 2)
     tmp = _scratch_dir("replay_")
+    changes.coalesce(1).write.mode("overwrite").json(f"{tmp}/w0")
+    # epoch 0, then a byte-identical redelivery of the same file
+    stream = _file_stream(spark, changes.schema, [f"{tmp}/w0/part-*.json"] * 2, tmp)
     target = ParquetMergeTarget(
         spark, f"{tmp}/target", ["user_id"], "user_id long, value double"
     )

@@ -177,22 +177,44 @@ class _ScopedVersions:
 
         A ``p=<value>`` dir the manifest no longer names held a
         partition whose rows were all deleted. No read reaches its
-        versions (``read_version`` is unpartitioned-only), so all of
-        them go."""
+        versions (``read_version`` is unpartitioned-only), so they go,
+        but only those older than the manifest: a newer one was put in
+        place by an epoch that has not committed yet (a new partition,
+        or one re-created after a full delete). A value with '/' in it
+        nests (``p=api/v1`` is value 'api/v1'), so a dir some named
+        value runs through is left alone."""
+        # stat before reading: a commit in between leaves the cut-off
+        # older than the manifest read, never newer
+        committed = (
+            os.stat(self._pointer).st_mtime_ns
+            if os.path.exists(self._pointer)
+            else -1
+        )
         floors = {
             key: current - keep_last
             for key, current in self._scopes(self._manifest()).items()
         }
+        named = [k for k in floors if k is not None]
         for entry in os.listdir(self.path):
-            if entry.startswith("p=") and entry[2:] not in floors:
-                floors[entry[2:]] = math.inf
+            value = entry[2:]
+            if entry.startswith("p=") and not any(
+                k == value or k.startswith(value + "/") for k in named
+            ):
+                floors[value] = None
         removed = 0
         for key, floor in floors.items():
             d = self._scope_dir(key)
             for entry in os.listdir(d):
                 ver = entry[1:]
-                if entry.startswith("v") and ver.isdigit() and int(ver) <= floor:
-                    shutil.rmtree(os.path.join(d, entry), ignore_errors=True)
+                if not (entry.startswith("v") and ver.isdigit()):
+                    continue
+                vdir = os.path.join(d, entry)
+                if floor is None:  # an unnamed partition
+                    stale = os.stat(vdir).st_mtime_ns <= committed
+                else:
+                    stale = int(ver) <= floor
+                if stale:
+                    shutil.rmtree(vdir, ignore_errors=True)
                     removed += 1
         return removed
 

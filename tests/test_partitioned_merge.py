@@ -383,6 +383,43 @@ def test_vacuum_reclaims_fully_deleted_partition(spark, tmp_path):
     assert [(r["id"], r["v"]) for r in t.read().collect()] == [(2, "y7")]
 
 
+def test_vacuum_keeps_slash_valued_partition(spark, tmp_path):
+    """A value with '/' in it nests its scope dir (p=api/v1 is value
+    'api/v1'); vacuum must not take the top 'p=api' dir for a deleted
+    partition and remove the live one under it."""
+    root = tmp_path / "sl"
+    t = ParquetMergeTarget(
+        spark, str(root), ["id"], "id long, dt string, v string", partition_col="dt",
+    )
+    for epoch in range(3):
+        op = "insert" if epoch == 0 else "update"
+        t.apply_batch(_batch(spark, [(1, "api/v1", f"x{epoch}", op, epoch + 1)]), epoch_id=epoch)
+    assert t.partition_version("api/v1") == 3
+    assert sorted(os.listdir(root / "p=api" / "v1")) == ["v1", "v2", "v3"]
+
+    assert t.vacuum(keep_last=1) == 2
+    assert sorted(os.listdir(root / "p=api" / "v1")) == ["v3"]
+    assert [(r["id"], r["v"]) for r in t.read().collect()] == [(1, "x2")]
+
+
+def test_vacuum_spares_uncommitted_partition(spark, tmp_path):
+    """An epoch puts a new partition's version in place before its
+    manifest flip names it; a vacuum in between must leave it."""
+    root = tmp_path / "inf"
+    t = ParquetMergeTarget(
+        spark, str(root), ["id"], "id long, dt string, v string", partition_col="dt",
+    )
+    t.apply_batch(_batch(spark, [(1, "a", "x", "insert", 1)]), epoch_id=0)
+    pending = root / "p=c" / "v1"
+    pending.mkdir(parents=True)
+    (pending / "part-0.parquet").write_bytes(b"")
+    later = os.stat(t._pointer).st_mtime + 1
+    os.utime(pending, (later, later))
+
+    assert t.vacuum(keep_last=1) == 0
+    assert pending.exists()
+
+
 def _listing(root):
     return sorted(
         os.path.relpath(os.path.join(d, f), root)

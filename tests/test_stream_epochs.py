@@ -8,7 +8,7 @@ becomes a test failure instead of a bench mystery. Each registry stream
 runs through `queries._run_available_now` (the CDC pipeline through the
 library's `run_stream`); both wait in `queries._await_stream`, which
 records the terminated query's geometry from its recentProgress into
-`queries.STREAM_GEOMETRY["__last__"]`.
+`queries.LAST_STREAM_GEOMETRY`.
 """
 
 import pytest
@@ -17,11 +17,11 @@ from gravity_spark import queries as Q
 
 
 def _geom(spark, sf_dir, name):
-    Q.STREAM_GEOMETRY.clear()
+    Q.LAST_STREAM_GEOMETRY = None
     df = Q.REGISTRY[name].spark(spark, sf_dir)
     df.count()  # streams already ran inside the query fn; force the read too
-    assert "__last__" in Q.STREAM_GEOMETRY, f"{name} recorded no geometry"
-    return Q.STREAM_GEOMETRY["__last__"]
+    assert Q.LAST_STREAM_GEOMETRY is not None, f"{name} recorded no geometry"
+    return Q.LAST_STREAM_GEOMETRY
 
 
 def test_stream_join_single_data_batch(spark, sf_dir):
