@@ -10,7 +10,8 @@ Tiers, all shuffle-conscious:
             rows → bucket equi-join. Candidate generation is an
             equi-join, so the quadratic work is confined to
             same-bucket groups; connected components over the same
-            bucket membership turn pairs into clusters.
+            bucket membership (functions/graph.py) turn pairs into
+            clusters.
 - SimHash:  16-bit md5 bit-vote fingerprint; near-dups = small
             hamming distance within a band bucket.
 - blocked Jaccard/containment: exact verification inside a blocking
@@ -27,11 +28,10 @@ on batch input, so the form follows ``isStreaming`` and nothing else.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gravity_spark.functions.graph import connected_components_bipartite
 from gravity_spark.functions.text import fingerprint, tokenize
 
 NUM_MINHASH = 16
@@ -193,343 +193,6 @@ def subblocked_self_join(g: DataFrame, block: str, on: Column | None = None) -> 
     if on is not None:
         cond = cond & on
     return a.join(b, cond)
-
-def _persistent_rdd_ids(df: DataFrame) -> set[int]:
-    sc = df.sparkSession.sparkContext
-    return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-
-def _checkpoint_rdd_id(df: DataFrame) -> int | None:
-    """The RDD id persisted by this DataFrame's localCheckpoint(): the
-    checkpointed Dataset's analyzed plan is a LogicalRDD wrapping
-    exactly the RDD the checkpoint call persisted. Tracking THIS id —
-    instead of diffing the SparkContext-GLOBAL persistent-RDD set —
-    means an iterative loop's cleanup sweep can never unpersist blocks
-    persisted concurrently by another query sharing the session (for a
-    localCheckpointed frame that would make it unrecomputable).
-
-    Returns None — with a LOUD warning — if the analyzed plan isn't the
-    expected LogicalRDD shape: callers skip the unpersist then, which
-    reintroduces a per-round executor-storage leak in the iterative
-    loops (kcore / connected_components / LPA). A Spark-version change
-    in localCheckpoint's plan shape must not fail silently; the warning
-    is the signal to update this accessor (pytest turns it into an
-    error via filterwarnings in the storage-growth tests)."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        name = plan.getClass().getSimpleName()
-        if name == "LogicalRDD":
-            return plan.rdd().id()
-    except Exception as e:  # JVM accessor shape changed entirely
-        name = f"<accessor error: {e}>"
-    warnings.warn(
-        "gravity_spark: _checkpoint_rdd_id expected a LogicalRDD analyzed "
-        f"plan for a localCheckpoint-ed frame, got {name}; checkpoint "
-        "blocks for this round will NOT be unpersisted (storage leak "
-        "until JVM GC). Spark's localCheckpoint plan shape likely "
-        "changed — update _checkpoint_rdd_id.",
-        RuntimeWarning,
-        stacklevel=2,
-    )
-    return None
-
-
-def _unpersist_rdds(df: DataFrame, ids: set[int]) -> None:
-    """Free localCheckpoint blocks by RDD id. Dataset.unpersist() only
-    talks to the SQL cache manager; checkpoint storage is RDD-level and
-    would otherwise pin executor memory until JVM GC gets around to it
-    (observed: stale checkpoints from earlier queries pushing a later
-    window sort into spill, 3.5 s → 28 s)."""
-    sc = df.sparkSession.sparkContext
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        rdd = jmap.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
-
-
-class _fixpoint_partitions:
-    """Scale the shuffle-partition count of a fixpoint loop to the
-    GRAPH, not the session (spark_optimization_guide §2.2: partitions
-    sized to data; a constant tuned for either local mode or a cluster
-    is wrong at the other end). The iterative loops below run ~5-10
-    exchanges per round over frames of O(edges) rows; with the session
-    default (= core count locally, often 200+ on a cluster) every one
-    of those exchanges launches near-empty tasks and an AQE stage-job,
-    and the loop's wall-clock becomes pure scheduler latency (measured:
-    the 8-round sf0.1 dedup loop is ~190 single-task stage-jobs, 6.2 s
-    at 32 partitions vs 4.2 s at 4). Entering the context downscales
-    ``spark.sql.shuffle.partitions`` to ceil(rows / rows_per_partition)
-    — ~100-200 MB of (long, long/string) rows per partition — ONLY when
-    that is below the current setting; big graphs keep the session
-    value (and AQE coalescing) untouched, so this can never shrink a
-    100 TB run's parallelism. Restores the previous value on exit.
-
-    CONCURRENCY CONTRACT (r11, advisor medium): this mutates the
-    SESSION-scoped ``spark.sql.shuffle.partitions`` for the loop's
-    duration, so a concurrent query or stream planned on the same
-    SparkSession while a loop runs would plan its shuffles with the
-    downscaled count. The advisor's alternatives were both assessed and
-    rejected: an explicit ``.repartition(target, key)`` before each loop
-    groupBy moves the exchange AHEAD of the partial aggregation (full
-    rows shuffle instead of map-side-combined partials — strictly more
-    bytes, guide §2.3), and ``spark.newSession()`` cannot execute
-    DataFrames built on the caller's session (a DataFrame is bound to
-    its session; rebuilding the inputs in a clone needs an RDD
-    round-trip through Python serialization). The loops are therefore
-    single-owner: the bench, the driver, and every registered query run
-    them sequentially on an otherwise-idle session. Callers that share
-    a session across threads must serialize fixpoint calls."""
-
-    ROWS_PER_PARTITION = 2_000_000
-
-    def __init__(self, spark, n_rows: int):
-        self.spark = spark
-        self.n_rows = max(int(n_rows), 1)
-        self.prev: str | None = None
-
-    def __enter__(self):
-        prev = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        target = -(-self.n_rows // self.ROWS_PER_PARTITION)  # ceil
-        if target < prev:
-            self.prev = str(prev)
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        return self
-
-    def __exit__(self, *exc):
-        if self.prev is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
-
-# Auto-broadcast bound for the fixpoint loops (guide §3.1: broadcast
-# the side that FITS, decided from a measured count, not a guess). The
-# per-round label/bucket-label frames are bounded by the loop's input
-# row count; below this bound they are statically broadcast-hinted.
-# Why it matters: under AQE a hint-less round plans as SMJ and AQE
-# materializes BOTH sides' shuffle stages (including the big membership
-# frame, re-shuffled EVERY round) before converting to broadcast at
-# runtime — the static hint removes the membership shuffle and its
-# stage-jobs outright. ~4M (v, label) rows ≈ 200 MB as a hashed
-# relation: comfortably a broadcast on any executor profile; a 100 TB
-# graph is far above the bound and keeps the shuffle path.
-_BROADCAST_FIXPOINT_ROWS = 4_000_000
-
-
-def connected_components(
-    edges: DataFrame,
-    vertices: DataFrame,
-    id_col: str = "doc_id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components over near-dup pair edges → dedup clusters.
-
-    Min-label propagation: every vertex starts labelled with its own id;
-    each round, a vertex adopts the minimum label among itself and its
-    neighbours; converged when no label changes. Returns
-    ``(id_col, component)`` where component = min vertex id reachable.
-
-    Scale notes: each round is one shuffle over (vertex, label) pairs —
-    never the documents — and rounds ≈ cluster diameter, which for
-    near-dup clusters is small (most are cliques from a shared LSH
-    bucket, diameter 1-2). Lineage is truncated per round with
-    localCheckpoint so the plan stays O(1) deep. Convergence is detected
-    by the label sum: labels only ever decrease, so an unchanged sum is
-    a fixpoint. For adversarial long-chain graphs swap the loop body for
-    the alternating large-star/small-star rounds (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — same
-    per-round shuffle shape, O(log n) rounds.
-
-    r10 shuffle-count cut: SELF-LOOP edges (v→v for every vertex) fold
-    the per-round ``labels LEFT JOIN neighbor_min + least(...)`` update
-    into the propagation aggregation itself — min over neighbors now
-    includes the vertex's own label, so each round is ONE join + ONE
-    aggregation instead of two joins + one aggregation. Costs O(|V|)
-    extra edge rows in the one-time sym build; removes a full shuffle
-    of the label table per round. Output is row-identical (verified
-    against the two-join form). Loop partitions scale to the edge
-    count via _fixpoint_partitions. Precondition (held by every
-    caller, now load-bearing for the output VERTEX SET too): edge
-    endpoints ⊆ vertices.
-    """
-    sym = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-    # self-loops: every vertex is its own neighbor, so the per-round
-    # aggregation alone computes min(own label, neighbor labels) and
-    # vertices with no pair edges survive as singletons
-    sym = sym.union(
-        vertices.select(
-            F.col(id_col).alias("src"), F.col(id_col).alias("dst")
-        )
-    )
-    # Checkpoints are taken LAZILY: the label-sum action that drives the
-    # convergence test is the materializing pass, so caching a round's
-    # labels and reading its fixpoint scalar are ONE job, not two (sym
-    # materializes inside round 1's join job the same way).
-    sym = sym.distinct().localCheckpoint(eager=False)
-    sym_id = _checkpoint_rdd_id(sym)  # sym, reused every round
-    labels = vertices.select(
-        F.col(id_col).alias("v"), F.col(id_col).cast("long").alias("label")
-    ).localCheckpoint(eager=False)
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    prev_id = _checkpoint_rdd_id(labels)
-    # labels is built from vertices only, so the init sum does NOT
-    # materialize sym — this count() is the action that pays the one-
-    # time distinct/union edge build (r10 advisor comment fix), and its
-    # value drives both the loop partition scale and the broadcast
-    # decision below
-    n_edges = sym.count()
-    # scale-adaptive broadcast (guide §3.1): labels is O(vertices) ≤
-    # n_edges rows; when the measured count fits, hint it so no round
-    # ever shuffles the edge table (see _BROADCAST_FIXPOINT_ROWS)
-    hb = F.broadcast if n_edges <= _BROADCAST_FIXPOINT_ROWS else (lambda df: df)
-    with _fixpoint_partitions(edges.sparkSession, n_edges):
-        for _ in range(max_iter):
-            labels = (
-                sym.join(hb(labels), sym.src == labels.v)
-                .groupBy(F.col("dst").alias("v"))
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint(eager=False)
-            )
-            new_sum = labels.agg(F.sum("label")).collect()[0][0]
-            if prev_id is not None:  # prior round's checkpoint, superseded now
-                _unpersist_rdds(labels, {prev_id})
-            prev_id = _checkpoint_rdd_id(labels)
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-    if sym_id is not None:
-        _unpersist_rdds(labels, {sym_id})
-    return labels.select(F.col("v").alias(id_col), F.col("label").alias("component"))
-
-
-def connected_components_bipartite(
-    members: DataFrame,
-    id_col: str = "doc_id",
-    bucket_col: str = "bucket",
-    max_iter: int = 25,
-    stats: dict | None = None,
-    broadcast_small: bool = False,
-) -> DataFrame:
-    """Connected components over doc↔bucket membership (bipartite form).
-
-    Docs sharing an LSH bucket are pairwise connected, so components of
-    the bipartite graph equal components of the materialized pair graph
-    — but the edge list is O(docs × bands) instead of O(Σ bucket²). On
-    clique-heavy corpora (the common near-dup case) that is the
-    difference between millions of pair edges and one row per (doc,
-    band). Alternating min-label rounds: bucket label = min over member
-    docs, doc label = min over its buckets; bucket vertices never
-    surface in the output so their ids never pollute the label space.
-
-    ``broadcast_small=True`` statically broadcast-hints every per-round
-    small frame (labels, bucket labels, the compression map) — for
-    DELTA-scale graphs (IVM relabel loops over touched components)
-    where every round's frames provably fit in a broadcast, so the
-    loop no longer depends on AQE's runtime broadcast conversion and
-    its per-stage-job driver latency. Leave False for corpus-scale
-    graphs: labels there is O(vertices) and a static broadcast hint
-    would be a scale bug.
-
-    r10 shuffle-count cut: a synthetic SELF-BUCKET per vertex ("\\x00"
-    prefix — collides with no real bucket) replaces the old null-bucket
-    singleton convention AND folds the per-round ``labels LEFT JOIN
-    neighbor_min + least(...)`` update into the doc-side aggregation:
-    min over a doc's buckets now includes its own label via the self
-    bucket, so each round is two join+agg hops instead of two hops plus
-    a label-update join. Costs O(|V|) membership rows once; removes a
-    full label-table shuffle per round — output verified row-identical
-    on the sf0.1 dedup graph (8 rounds, 711 components, both forms).
-    NULL-bucket member rows (the callers' singleton-seeding convention)
-    still only seed the vertex set. Loop shuffle partitions scale to
-    the membership size via _fixpoint_partitions.
-    """
-    # Lazy checkpoints + the label-sum action as the materializing pass:
-    # caching a round's labels and reading its convergence scalar are
-    # ONE job per round. (labels is built from verts only, so the init
-    # sum materializes labels alone; m's one-time distinct/union build
-    # is priced by the count() below — r10 advisor comment fix.)
-    base = members.select(F.col(id_col).alias("v"), F.col(bucket_col).alias("bk"))
-    verts = base.select("v").distinct()
-    selfb = verts.select(
-        "v", F.concat(F.lit("\x00"), F.col("v").cast("string")).alias("bk")
-    )
-    m = (
-        base.filter(F.col("bk").isNotNull())
-        .distinct()
-        .unionByName(selfb)
-        .localCheckpoint(eager=False)
-    )
-    m_id = _checkpoint_rdd_id(m)  # m, reused every round
-    labels = (
-        verts.withColumn("label", F.col("v").cast("long"))
-        .localCheckpoint(eager=False)
-    )
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    prev_id = _checkpoint_rdd_id(labels)
-    # the action that pays m's one-time distinct/union build; its value
-    # drives the loop partition scale and the broadcast decision
-    n_members = m.count()
-    rounds = 0
-    # scale-adaptive broadcast (guide §3.1, r11): labels / bucket_label
-    # / the compression map are all bounded by n_members rows; when the
-    # measured count fits (_BROADCAST_FIXPOINT_ROWS), statically hint
-    # them so NO round shuffles the membership table — the hint-less
-    # plan had AQE materialize m's shuffle stage in every round's joins
-    # before converting to broadcast at runtime. Corpus-scale graphs
-    # stay on the shuffle path (the hint is count-gated, not assumed).
-    small = broadcast_small or n_members <= _BROADCAST_FIXPOINT_ROWS
-    hb = F.broadcast if small else (lambda df: df)
-    with _fixpoint_partitions(members.sparkSession, n_members):
-        for _ in range(max_iter):
-            rounds += 1
-            bucket_label = (
-                m.join(hb(labels), "v").groupBy("bk").agg(F.min("label").alias("bl"))
-            )
-            base_l = (
-                m.join(hb(bucket_label), "bk")
-                .groupBy("v")
-                .agg(F.min("bl").alias("label"))
-            )
-            base_id = None
-            if small:
-                # broadcast plans have no exchanges to reuse, so the
-                # compression self-join below would otherwise compute
-                # the round subtree twice (broadcast build + probe);
-                # a lazy checkpoint makes both sides read one cache.
-                # (In the shuffle path this was measured a wash in r10
-                # — ReusedExchange already dedups the heavy stages —
-                # so it is gated to the broadcast path.)
-                base_l = base_l.localCheckpoint(eager=False)
-                base_id = _checkpoint_rdd_id(base_l)
-            # path compression (pointer doubling): label(v) <- label(label(v)).
-            # Neighbor-min alone needs O(diameter) rounds on chain-shaped
-            # graphs; compressing through the label forest each round bounds
-            # convergence by O(log n) regardless of chain length.
-            l2 = base_l.select(F.col("v").alias("v2"), F.col("label").alias("label2"))
-            labels = (
-                base_l.join(hb(l2), base_l.label == l2.v2, "left")
-                .select("v", F.coalesce(F.col("label2"), F.col("label")).alias("label"))
-                .localCheckpoint(eager=False)
-            )
-            new_sum = labels.agg(F.sum("label")).collect()[0][0]
-            # prior round's labels + this round's pre-compression frame,
-            # both superseded once the new labels materialized
-            dead = {i for i in (prev_id, base_id) if i is not None}
-            if dead:
-                _unpersist_rdds(labels, dead)
-            prev_id = _checkpoint_rdd_id(labels)
-            if new_sum == prev_sum:
-                break
-            prev_sum = new_sum
-    if stats is not None:
-        stats["rounds"] = rounds
-    if m_id is not None:
-        _unpersist_rdds(labels, {m_id})
-    return labels.select(F.col("v").alias(id_col), F.col("label").alias("component"))
 
 
 def prefix_filter_pairs(

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from gravity_spark.core.envelope import events_to_changes
 from gravity_spark.functions import dedup as dd
+from gravity_spark.functions import graph as G
 from gravity_spark.functions import text as tx
 from gravity_spark.functions import similarity as sim
 from gravity_spark.functions.dedup import MINHASH_BANDS, NUM_MINHASH
@@ -2972,6 +2973,20 @@ _SIG_CTE = f"""
             FROM tok GROUP BY doc_id)
 """
 
+# dd.minhash_bands in SQL, one column per band: bh{b} is the md5 of
+# band b's concatenated minima
+_BAND_WIDTH = NUM_MINHASH // MINHASH_BANDS
+_BAND_HASHES = ", ".join(
+    f"md5({' || '.join(f'm{i}' for i in range(b * _BAND_WIDTH, (b + 1) * _BAND_WIDTH))}) AS bh{b}"
+    for b in range(MINHASH_BANDS)
+)
+# a candidate pair shares at least one band bucket
+_BAND_MATCH = " OR ".join(f"a.bh{b} = b.bh{b}" for b in range(MINHASH_BANDS))
+# long-form (doc_id, bucket) membership of a `banded` CTE
+_BAND_BUCKETS = " UNION ALL ".join(
+    f"SELECT doc_id, '{b}#' || bh{b} AS bucket FROM banded" for b in range(MINHASH_BANDS)
+)
+
 
 _SIG_JOINED = " || ',' || ".join(f"m{i}" for i in range(NUM_MINHASH))
 
@@ -2994,17 +3009,12 @@ def dedup_minhash_signature(spark, sf_dir):
 
 
 def _minhash_pairs_sql() -> str:
-    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
-    band_hashes = [
-        f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
-        for b in range(bands)
-    ]
     return f"""
     WITH {_SIG_CTE},
-    banded AS (SELECT doc_id, {', '.join(band_hashes)} FROM sig)
+    banded AS (SELECT doc_id, {_BAND_HASHES} FROM sig)
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
     FROM banded a JOIN banded b ON a.doc_id < b.doc_id
-     AND ({' OR '.join(f'a.bh{b} = b.bh{b}' for b in range(bands))})
+     AND ({_BAND_MATCH})
     """
 
 
@@ -3017,21 +3027,13 @@ def dedup_minhash_pairs(spark, sf_dir):
 
 
 def _bucket_stats_sql() -> str:
-    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
-    band_hashes = [
-        f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
-        for b in range(bands)
-    ]
-    bucket_rows = " UNION ALL ".join(
-        f"SELECT doc_id, '{b}#' || bh{b} AS bucket FROM banded" for b in range(bands)
-    )
     return f"""
     -- LSH bucket-size histogram: the pre-flight skew diagnostic run
     -- before a corpus-scale dedup — a hot bucket of size s costs
     -- s·(s-1)/2 candidate pairs in the bucket join
     WITH {_SIG_CTE},
-    banded AS (SELECT doc_id, {', '.join(band_hashes)} FROM sig),
-    memb AS ({bucket_rows}),
+    banded AS (SELECT doc_id, {_BAND_HASHES} FROM sig),
+    memb AS ({_BAND_BUCKETS}),
     sizes AS (SELECT bucket, count(*) AS sz FROM memb GROUP BY bucket)
     SELECT sz,
            count(*) AS n_buckets,
@@ -3063,7 +3065,8 @@ def dedup_bucket_stats(spark, sf_dir):
 def _components_sql() -> str:
     """Connected components over the MinHash-LSH candidate edges
     (oracle-side); the Spark side runs distributed label propagation
-    (functions/dedup.py).
+    (functions/dedup.py::near_dup_components over
+    functions/graph.py::connected_components_bipartite).
 
     The recursive closure is run on a CONTRACTED graph, not the raw
     pair edges: every LSH bucket is a clique, so connectivity is fully
@@ -3077,18 +3080,10 @@ def _components_sql() -> str:
     through their bucket-min; bucket-less docs stay singletons. The
     component label min-over-bucket-mins equals the true min doc id:
     a component's min doc is itself its bucket's min."""
-    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
-    band_hashes = [
-        f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
-        for b in range(bands)
-    ]
-    bucket_rows = " UNION ALL ".join(
-        f"SELECT doc_id, '{b}#' || bh{b} AS bucket FROM banded" for b in range(bands)
-    )
     return f"""
     WITH RECURSIVE {_SIG_CTE},
-    banded AS (SELECT doc_id, {', '.join(band_hashes)} FROM sig),
-    memb AS ({bucket_rows}),
+    banded AS (SELECT doc_id, {_BAND_HASHES} FROM sig),
+    memb AS ({_BAND_BUCKETS}),
     bmin AS (SELECT bucket, min(doc_id) AS bm FROM memb GROUP BY bucket),
     dmin AS (
       SELECT m.doc_id, min(b.bm) AS dm
@@ -3820,12 +3815,6 @@ def dedup_containment(spark, sf_dir):
 
 
 def _lsh_pr_sql() -> str:
-    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
-    band_hashes = [
-        f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
-        for b in range(bands)
-    ]
-    ors = " OR ".join(f"a.bh{b} = b.bh{b}" for b in range(bands))
     mins = ", ".join(f"min({_rot_sql(i)}) AS m{i}" for i in range(NUM_MINHASH))
     return f"""
     -- LSH tuning metric: precision/recall of the banded MinHash
@@ -3843,10 +3832,10 @@ def _lsh_pr_sql() -> str:
       FROM (SELECT doc_id, unnest(list_distinct({_TOKS})) AS t FROM eval)
     ),
     sig AS (SELECT doc_id, {mins} FROM tok GROUP BY doc_id),
-    banded AS (SELECT doc_id, {', '.join(band_hashes)} FROM sig),
+    banded AS (SELECT doc_id, {_BAND_HASHES} FROM sig),
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM banded a JOIN banded b ON a.doc_id < b.doc_id AND ({ors})
+      FROM banded a JOIN banded b ON a.doc_id < b.doc_id AND ({_BAND_MATCH})
     ),
     g AS (SELECT doc_id, source, list_distinct({_TOKS}) AS toks FROM eval),
     cs AS (
@@ -6850,24 +6839,10 @@ def graph_pagerank_purchases(spark, sf_dir):
     """Random-walk PageRank (damping 0.85, 3 fixed iterations) on the
     undirected customer↔supplier purchase graph — link-graph centrality
     of the kind web-crawl curation uses as a document-quality prior.
-    Entirely INTEGER arithmetic (micro-rank units, floor divisions) so
-    the result is bit-exact in both engines despite being an iterative
-    float-ish algorithm. Scale shape: per round one equi-join of the
-    edge list against the rank table + one hash agg — the same shuffle
-    profile as the label-propagation components operator; rank and
-    degree tables are O(nodes), edges never materialize pairs beyond the
-    input relation. Fixed rounds ⇒ no convergence collect in the loop.
-
-    r11 (guide §2.3/§3.1): the edge list and the degree table are
-    materialized ONCE (localCheckpoint) — the old plan re-derived the
-    orders⋈lineitem distinct in every round's subtree. The per-round
-    O(nodes) frames (ranks, degree, contrib) are statically
-    broadcast-hinted when the MEASURED node count fits
-    (_BROADCAST_FIXPOINT_ROWS), so no round shuffles the edge table;
-    above the bound the shuffle path is kept — the hint is count-gated,
-    never assumed."""
-    from gravity_spark.functions.dedup import _BROADCAST_FIXPOINT_ROWS
-
+    Integer micro-rank arithmetic, so the result is bit-exact in both
+    engines (functions/graph.py::pagerank); rank and degree tables are
+    O(nodes), and edges never materialize pairs beyond the input
+    relation."""
     orders = T(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     pairs = (
@@ -6875,40 +6850,13 @@ def graph_pagerank_purchases(spark, sf_dir):
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
+    # customers on even node ids, suppliers on odd ones
     edges = pairs.select(
         (2 * F.col("c")).alias("src"), (2 * F.col("s") + 1).alias("dst")
     ).unionAll(
         pairs.select((2 * F.col("s") + 1).alias("src"), (2 * F.col("c")).alias("dst"))
     )
-    edges = edges.localCheckpoint(eager=False)
-    deg = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("degree"))
-        .localCheckpoint(eager=False)
-    )
-    # one job: materializes deg (and edges, its input) and measures the
-    # node count that gates the broadcast decision
-    n_nodes = deg.count()
-    hb = F.broadcast if n_nodes <= _BROADCAST_FIXPOINT_ROWS else (lambda df: df)
-    ranks = deg.select("node", F.lit(1000000).cast("long").alias("rank_micro"))
-    for _ in range(3):
-        contrib = (
-            edges.join(hb(ranks), edges.src == ranks.node)
-            .join(
-                hb(deg.select(F.col("node").alias("dn"), "degree")),
-                F.col("src") == F.col("dn"),
-            )
-            .select("dst", F.expr("rank_micro div degree").alias("part"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("part").alias("contrib"))
-        )
-        ranks = deg.join(hb(contrib), "node", "left").select(
-            "node",
-            (
-                F.lit(150000)
-                + F.expr("850000 * coalesce(contrib, 0) div 1000000")
-            ).cast("long").alias("rank_micro"),
-        )
+    ranks = G.pagerank(edges, 3)
     return ranks.filter(F.col("node") % 2 == 1).select(
         F.expr("(node - 1) div 2").alias("suppkey"), "rank_micro"
     )
@@ -7111,17 +7059,12 @@ def streaming_sessionize_stateful(spark, sf_dir):
 def _gate_sql() -> str:
     """Sequential truth of the streaming minhash gate: a doc is new iff
     no smaller-id doc shares any LSH band bucket."""
-    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
-    band_hashes = [
-        f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
-        for b in range(bands)
-    ]
     long_form = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, bh{b} AS bh FROM banded" for b in range(bands)
+        f"SELECT doc_id, {b} AS band, bh{b} AS bh FROM banded" for b in range(MINHASH_BANDS)
     )
     return f"""
     WITH {_SIG_CTE},
-    banded AS (SELECT doc_id, {', '.join(band_hashes)} FROM sig),
+    banded AS (SELECT doc_id, {_BAND_HASHES} FROM sig),
     bl AS ({long_form}),
     dup AS (
       SELECT DISTINCT b.doc_id
@@ -8377,24 +8320,19 @@ def verifier_range_counts(spark, sf_dir):
 
 
 def _mh_est_sql() -> str:
-    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
-    band_hashes = [
-        f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
-        for b in range(bands)
-    ]
     agree = " + ".join(
         f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)"
         for i in range(NUM_MINHASH)
     )
     return f"""
     WITH {_SIG_CTE},
-    banded AS (SELECT doc_id, {', '.join(band_hashes)} FROM sig),
+    banded AS (SELECT doc_id, {_BAND_HASHES} FROM sig),
     pairs AS (
       -- deterministic 1-in-4 sample of the candidate pairs: the eval
       -- grades the sketch config, a fixed sample grades it just as well
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b ON a.doc_id < b.doc_id
-       AND ({' OR '.join(f'a.bh{b} = b.bh{b}' for b in range(bands))})
+       AND ({_BAND_MATCH})
       WHERE (a.doc_id + b.doc_id) % 4 = 0
     ),
     est AS (
@@ -9138,42 +9076,6 @@ def hll_distinct_portable(spark, sf_dir):
     )
 
 
-def _copurchase_edges(
-    li, min_support: int = 2, key: str = "l_orderkey", val: str = "l_partkey"
-):
-    """Support-filtered co-purchase pair counts (u < v, one row per
-    pair with multiplicity m) from a (l_orderkey, l_partkey)
-    projection — the shared edge generator for the graph battery and
-    market-basket rules.
-
-    r10 (guide §2.2): per-order sorted part arrays exploded into
-    in-order pairs replace the lineitem self-join — lineitem shuffles
-    ONCE (groupBy order) instead of twice (both join sides), and the
-    pair stream is generated in-task from each order's array. Pair
-    multiplicity is identical to the join form (cnt_o(u)·cnt_o(v)):
-    positions i<j over the sorted array with ps[i] < ps[j] enumerate
-    exactly the a.partkey < b.partkey join pairs, duplicates included.
-    Quadratic only within an order (≤7 line items). Set-identical
-    verified against the join form at sf0.1 (exceptAll both ways = 0);
-    measured 2.08 → 0.99 s isolated on the support-2 graph.
-
-    ``key``/``val`` generalize the same shape to any bipartite
-    projection (customer_copurchase_jaccard groups customers per
-    part)."""
-    arr = li.groupBy(key).agg(F.sort_array(F.collect_list(val)).alias("ps"))
-    return (
-        arr.select(F.col("ps"), F.posexplode("ps").alias("i", "u"))
-        .select(
-            "u",
-            F.explode(F.slice("ps", F.col("i") + 2, F.size("ps"))).alias("v"),
-        )
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .filter(F.col("m") >= min_support)
-    )
-
-
 @register(
     "graph_triangle_count",
     """
@@ -9207,10 +9109,8 @@ def graph_triangle_count(spark, sf_dir):
     the id-oriented SQL oracle agrees bit-for-bit. The co-purchase
     generator is per-order pairs (quadratic only within an order's line
     items, ≤7 per order in TPC-H shape)."""
-    from gravity_spark.functions import graph as G
-
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    e0 = _copurchase_edges(li).select("u", "v").persist()
+    e0 = G.copurchase_edges(li).select("u", "v").persist()
     tri = G.triangle_count(e0)
     edges = e0.agg(F.count(F.lit(1)).alias("n_edges"))
     return tri.crossJoin(F.broadcast(edges))
@@ -9267,35 +9167,23 @@ def graph_kcore_peel(spark, sf_dir):
     """Bounded-round k-core peeling of the co-purchase graph: each
     round drops vertices of degree < k and the edges touching them —
     the standard graph-hygiene pass (spam/hub pruning, community
-    pre-filter) before heavier graph analytics. Fixed round count, so
-    results are deterministic and the oracle is plain unrolled SQL; a
-    production run would peel to fixpoint (the per-round shape is
-    identical, only the loop guard changes).
+    pre-filter) before heavier graph analytics. The oracle is plain SQL
+    unrolled to 4 rounds; the Spark side is functions/graph.py::kcore
+    capped at 4 rounds, which stops early at a fixpoint — peeling past
+    it is a no-op, so both give the same rows.
 
     Scale shape: every round is one (vertex, count) aggregation — the
     shuffle carries vertex ids only — plus two LEFT SEMI joins pruning
-    the edge list; the edge list only ever shrinks, and persisting each
-    round keeps lineage flat. Degree-k filtering never materializes
+    the edge list; the edge list only ever shrinks, and checkpointing
+    each round keeps lineage flat. Degree-k filtering never materializes
     neighborhoods, so power-law hubs cost nothing beyond their edge
     rows (contrast the wedge join, which graph.py degree-orients for
     the same reason)."""
-    from gravity_spark.functions import graph as G
-
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = (
-        _copurchase_edges(li).select("u", "v")
-    ).localCheckpoint()  # eager: truncates lineage — each round's plan
-    # references the edge list twice (degrees + semi-join probe), so an
-    # un-truncated chain doubles the optimizer's tree per round
-    for _ in range(_KCORE_ROUNDS):
-        keep = G.degrees(edges).filter(F.col("d") >= _KCORE_K).select("x")
-        edges = (
-            edges.join(keep.withColumnRenamed("x", "u"), "u", "left_semi")
-            .join(keep.withColumnRenamed("x", "v"), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint()
-        )
-    return G.degrees(edges).select(
+    core, _rounds = G.kcore(
+        G.copurchase_edges(li).select("u", "v"), _KCORE_K, max_rounds=_KCORE_ROUNDS
+    )
+    return G.degrees(core).select(
         F.col("x").alias("node"), F.col("d").alias("degree")
     )
 
@@ -9310,7 +9198,7 @@ _KCORE_FIX_ROUNDS = 10
 def graph_kcore_fixpoint(spark, sf_dir):
     """k-core peeled to FIXPOINT (functions/graph.py::kcore) — the
     variant a user actually asks for: rounds run until a peel removes
-    nothing (scalar count per round on the eagerly-checkpointed,
+    nothing (one count per round, fused with the checkpoint of the
     only-shrinking edge list), with a safety round cap. At sf0.1 the
     co-purchase 2-core needs 7 rounds — more than the bounded peel's
     4 — so this query genuinely exercises the convergence loop. The
@@ -9321,10 +9209,8 @@ def graph_kcore_fixpoint(spark, sf_dir):
     Scale shape identical to the bounded peel (one vertex-id agg + two
     LEFT SEMI prunes per round, flat lineage via localCheckpoint); the
     loop guard adds one metadata-cheap count per round."""
-    from gravity_spark.functions import graph as G
-
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    edges = _copurchase_edges(li).select("u", "v")
+    edges = G.copurchase_edges(li).select("u", "v")
     # cap == oracle unroll depth: even if a pathological graph hasn't
     # converged by round 10, both engines have then run the same rounds
     core, _rounds = G.kcore(edges, _KCORE_K, max_rounds=_KCORE_FIX_ROUNDS)
@@ -9720,7 +9606,7 @@ def market_basket_rules(spark, sf_dir):
     table — half the join output and half the pair-agg shuffle for the
     identical directed result (r10, guide §2.2)."""
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    half = _copurchase_edges(li)
+    half = G.copurchase_edges(li)
     pairs = half.unionByName(
         half.select(F.col("v").alias("u"), F.col("u").alias("v"), "m")
     )
@@ -10057,18 +9943,13 @@ def orders_pareto_abc(spark, sf_dir):
 
 
 def _method_agreement_sql() -> str:
-    bands, width = MINHASH_BANDS, NUM_MINHASH // MINHASH_BANDS
-    band_hashes = [
-        f"md5({' || '.join(f'm{i}' for i in range(b * width, (b + 1) * width))}) AS bh{b}"
-        for b in range(bands)
-    ]
     return f"""
     WITH {_SIG_CTE},
-    banded AS (SELECT doc_id, {', '.join(band_hashes)} FROM sig),
+    banded AS (SELECT doc_id, {_BAND_HASHES} FROM sig),
     mhp AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
       FROM banded a JOIN banded b ON a.doc_id < b.doc_id
-       AND ({' OR '.join(f'a.bh{b} = b.bh{b}' for b in range(bands))})
+       AND ({_BAND_MATCH})
     ),
     sh AS (SELECT * FROM ({_simhash_sql()})),
     shp AS (
@@ -10183,7 +10064,7 @@ def graph_link_prediction(spark, sf_dir):
     agg broadcast-joined back. The common ≥ 2 floor keeps the output a
     shortlist as the graph grows."""
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    e0 = _copurchase_edges(li).select("u", "v").persist()
+    e0 = G.copurchase_edges(li).select("u", "v").persist()
     sym = e0.unionByName(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy(F.col("u").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     s1, s2 = sym.alias("s1"), sym.alias("s2")
@@ -11047,7 +10928,7 @@ def entity_resolution_customers(spark, sf_dir):
         & (F.col("ba") == F.col("bb"))
         & (F.levenshtein(F.col("na"), F.col("nb_")) <= 1)
     )
-    comp = dd.connected_components(
+    comp = G.connected_components(
         pairs.select(F.col("ra").alias("id_a"), F.col("rb").alias("id_b")),
         recs.select("rid"),
         id_col="rid",
@@ -11916,69 +11797,16 @@ def graph_label_propagation(spark, sf_dir):
     connectivity, PageRank = centrality, triangles = clustering, k-core
     = density, LPA = community).
 
-    Scale shape: per round ONE (vertex, label)-keyed count aggregation
-    over the symmetric edge list plus a vertex-partitioned top-1 window
-    — the same shuffle currency as the components rounds; labels are
-    eagerly localCheckpoint'd so plan depth stays O(1). Edge base is
-    the support-≥2 co-purchase join (quadratic only within an order's
-    ≤7 line items)."""
+    Scale shape: functions/graph.py::label_propagation, one (vertex,
+    label)-keyed count aggregation plus a top-1 window per round. Edge
+    base is the support-≥2 co-purchase graph (quadratic only within an
+    order's ≤7 line items)."""
     li = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    e0 = _copurchase_edges(li).select("u", "v")
-    from gravity_spark.functions.dedup import (
-        _checkpoint_rdd_id,
-        _fixpoint_partitions,
-        _unpersist_rdds,
-    )
-
-    sym = (
-        e0.select(F.col("u").alias("s"), F.col("v").alias("d"))
-        .unionByName(e0.select(F.col("v").alias("s"), F.col("u").alias("d")))
-        .localCheckpoint(eager=True)
-    )
-    sym_id = _checkpoint_rdd_id(sym)
-    labels = (
-        sym.select(F.col("s").alias("lv")).distinct()
-        .select("lv", F.col("lv").alias("lbl"))
-    )
-    prev_id = None
-    w = Window.partitionBy("v").orderBy(F.col("cnt").desc(), F.col("lbl"))
-    # loop shuffle partitions scale to the edge count (downsize-only;
-    # see _fixpoint_partitions) — sym is already materialized, so the
-    # count is a cached-read job
-    n_sym = sym.count()
-    # scale-adaptive broadcast (guide §3.1, r11): labels is O(vertices)
-    # ≤ n_sym rows; when the measured count fits, hint it so no round
-    # shuffles the edge table (see dedup._BROADCAST_FIXPOINT_ROWS —
-    # hint-less AQE re-materializes sym's shuffle stage every round
-    # before converting the join to broadcast at runtime)
-    from gravity_spark.functions.dedup import _BROADCAST_FIXPOINT_ROWS
-
-    hb = F.broadcast if n_sym <= _BROADCAST_FIXPOINT_ROWS else (lambda df: df)
-    with _fixpoint_partitions(spark, n_sym):
-        for _ in range(3):
-            cnt = (
-                sym.join(hb(labels), sym.s == labels.lv)
-                .groupBy(F.col("d").alias("v"), "lbl")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            labels = (
-                cnt.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select(F.col("v").alias("lv"), "lbl")
-                .localCheckpoint(eager=True)
-            )
-            if prev_id is not None:  # superseded round's checkpoint
-                _unpersist_rdds(labels, {prev_id})
-            prev_id = _checkpoint_rdd_id(labels)
-    # final labels are an eager checkpoint — the edge list is no longer
-    # needed by the returned plan
-    if sym_id is not None:
-        _unpersist_rdds(labels, {sym_id})
-    wc = Window.partitionBy("lbl")
+    labels = G.label_propagation(G.copurchase_edges(li).select("u", "v"), 3)
     return labels.select(
-        F.col("lv").alias("vertex"),
-        F.col("lbl").alias("community"),
-        F.count(F.lit(1)).over(wc).alias("csize"),
+        F.col("v").alias("vertex"),
+        F.col("label").alias("community"),
+        F.count(F.lit(1)).over(Window.partitionBy("label")).alias("csize"),
     )
 
 
@@ -13298,7 +13126,7 @@ def market_basket_triples(spark, sf_dir):
     Scale shape: baskets are bounded (≤7 lines/order here; padded-cart
     limits in general), so the triple expansion is O(orders · k³) with
     k = pruned basket size, generated IN-TASK from each order's sorted
-    item array (r11, guide §2.2 — the _copurchase_edges pattern lifted
+    item array (r11, guide §2.2 — the graph.copurchase_edges pattern lifted
     to triples): one groupBy(ok) shuffle replaces the two
     orderkey-keyed self-joins, and the frequent-item prune is a
     broadcast semi-join before the arrays form. Items are distinct per
@@ -13910,7 +13738,7 @@ def customer_copurchase_jaccard(spark, sf_dir):
         # instead of on both sides of a pk-keyed self-join; (ck, pk)
         # is distinct, so in-array pairs are exactly the c1 < c2 join
         # pairs (quadratic bounded by the deg ≤ 60 stop-item cap)
-        pairs = _copurchase_edges(kept, min_support=3, key="pk", val="ck").select(
+        pairs = G.copurchase_edges(kept, min_support=3, key="pk", val="ck").select(
             F.col("u").alias("c1"),
             F.col("v").alias("c2"),
             F.col("m").alias("shared"),
@@ -15218,7 +15046,7 @@ def graph_components_incremental(spark, sf_dir):
                 F.col("ck").alias("doc_id"),
                 F.lit(None).cast("string").alias("bucket"),
             )
-            l1 = dd.connected_components_bipartite(
+            l1 = G.connected_components_bipartite(
                 base.unionByName(singleton)
             ).select(F.col("doc_id").alias("ck"), F.col("component").alias("lab"))
 
@@ -15231,7 +15059,7 @@ def graph_components_incremental(spark, sf_dir):
                 )
                 .distinct()
             )
-            relabel = dd.connected_components_bipartite(dmemb).select(
+            relabel = G.connected_components_bipartite(dmemb).select(
                 F.col("doc_id").alias("lab"), F.col("component").alias("newlab")
             )
             out = (

@@ -9,7 +9,8 @@ manifest (``_current.json``) names each scope's current version:
 
 - an unpartitioned target is the single root scope, ``<path>/v{n}``;
 - a partitioned target has one scope per partition value,
-  ``<path>/p=<value>/v{n}``.
+  ``<path>/p=<value>/v{n}``, with '%' and '/' in the value escaped as
+  ``%25`` and ``%2F``.
 
 Every change (an epoch's merge, a DDL rewrite, a compaction) writes the
 next version of each scope it touches, then flips the manifest with one
@@ -134,7 +135,13 @@ class _ScopedVersions:
         return {} if m["version"] is None else {None: m["version"]}
 
     def _scope_dir(self, key) -> str:
-        return self.path if key is None else os.path.join(self.path, f"p={key}")
+        if key is None:
+            return self.path
+        # Spark's own escapes for the two characters that would break a
+        # one-dir-per-value layout: '/' would nest ('api/v1' under
+        # 'api'), and escaping '%' too keeps the mapping one-to-one
+        name = key.replace("%", "%25").replace("/", "%2F")
+        return os.path.join(self.path, f"p={name}")
 
     def _version_dir(self, key, version: int) -> str:
         return os.path.join(self._scope_dir(key), f"v{version}")
@@ -180,9 +187,7 @@ class _ScopedVersions:
         versions (``read_version`` is unpartitioned-only), so they go,
         but only those older than the manifest: a newer one was put in
         place by an epoch that has not committed yet (a new partition,
-        or one re-created after a full delete). A value with '/' in it
-        nests (``p=api/v1`` is value 'api/v1'), so a dir some named
-        value runs through is left alone."""
+        or one re-created after a full delete)."""
         # stat before reading: a commit in between leaves the cut-off
         # older than the manifest read, never newer
         committed = (
@@ -190,20 +195,17 @@ class _ScopedVersions:
             if os.path.exists(self._pointer)
             else -1
         )
+        # scope dir -> newest version to remove (None: a dir no scope names)
         floors = {
-            key: current - keep_last
+            self._scope_dir(key): current - keep_last
             for key, current in self._scopes(self._manifest()).items()
         }
-        named = [k for k in floors if k is not None]
         for entry in os.listdir(self.path):
-            value = entry[2:]
-            if entry.startswith("p=") and not any(
-                k == value or k.startswith(value + "/") for k in named
-            ):
-                floors[value] = None
+            d = os.path.join(self.path, entry)
+            if entry.startswith("p=") and d not in floors:
+                floors[d] = None
         removed = 0
-        for key, floor in floors.items():
-            d = self._scope_dir(key)
+        for d, floor in floors.items():
             for entry in os.listdir(d):
                 ver = entry[1:]
                 if not (entry.startswith("v") and ver.isdigit()):

@@ -63,7 +63,7 @@ def test_attribution_exact_sums_and_shape(spark, sf_dir):
 
 
 def test_incremental_equals_full_recompute(spark, sf_dir):
-    from gravity_spark.functions.dedup import connected_components_bipartite
+    from gravity_spark.functions.graph import connected_components_bipartite
 
     inc = {
         r["custkey"]: r["component"]

@@ -164,7 +164,7 @@ def test_cosine_similarity_bounds(spark):
 
 
 def test_connected_components_chain_and_singleton(spark):
-    from gravity_spark.functions.dedup import connected_components
+    from gravity_spark.functions.graph import connected_components
 
     # chain 1-2-3-4 (diameter 3, needs >1 propagation round), pair 10-11,
     # singleton 20
@@ -182,7 +182,7 @@ def test_connected_components_chain_and_singleton(spark):
 
 
 def test_connected_components_bipartite_matches_pairwise(spark):
-    from gravity_spark.functions.dedup import connected_components_bipartite
+    from gravity_spark.functions.graph import connected_components_bipartite
 
     # buckets: {1,2} share b1; {2,3} share b2 (chain via buckets);
     # {10,11} share b3; 20 has a private bucket (singleton)
@@ -196,18 +196,6 @@ def test_connected_components_bipartite_matches_pairwise(spark):
         for r in connected_components_bipartite(members).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
-
-    # broadcast_small (the delta-IVM opt-in: statically hints every
-    # per-round small frame) must be value-identical — it only changes
-    # join strategy, and stays off by default (a static broadcast of a
-    # corpus-scale label frame would be a scale bug)
-    hinted = {
-        r["doc_id"]: r["component"]
-        for r in connected_components_bipartite(
-            members, broadcast_small=True
-        ).collect()
-    }
-    assert hinted == got
 
 
 # ---- prefix-filter exactness: property-based vs brute force ----------

@@ -95,10 +95,47 @@ def test_kcore_fixpoint_preserves_core_and_stops(spark):
     assert core2.count() == 6
 
 
-def test_kcore_no_storage_growth_across_rounds(spark):
-    """The per-round unpersist discipline must hold ONE edge-list
-    checkpoint in executor storage, not one per round — and the sweep
-    must free exactly kcore's own blocks, never a block persisted
+def _checkpoints_read(df):
+    """RDD ids of the checkpoints ``df``'s plan reads."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return {
+        leaves.apply(i).rdd().id()
+        for i in range(leaves.size())
+        if leaves.apply(i).getClass().getSimpleName() == "LogicalRDD"
+    }
+
+
+def _both_ways(e):
+    return e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    )
+
+
+# every loop on the round driver, run over a 12-vertex path (several
+# rounds each)
+_LOOPS = {
+    "connected_components": lambda e: G.connected_components(
+        e.select(F.col("u").alias("id_a"), F.col("v").alias("id_b")),
+        e.select(F.col("u").alias("doc_id"))
+        .union(e.select(F.col("v").alias("doc_id")))
+        .distinct(),
+    ),
+    "connected_components_bipartite": lambda e: G.connected_components_bipartite(
+        e.select(F.col("u").alias("doc_id"), F.col("v").cast("string").alias("bucket"))
+        .union(e.select("v", F.col("v").cast("string")))
+    ),
+    "kcore": lambda e: G.kcore(e, 2)[0],
+    "label_propagation": lambda e: G.label_propagation(e, 3),
+    "pagerank": lambda e: G.pagerank(_both_ways(e), 3),
+}
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+@pytest.mark.parametrize("loop", sorted(_LOOPS))
+def test_round_driver_no_storage_growth(spark, loop):
+    """A loop must hold ONE round's checkpoint in executor storage, not
+    one per round, and free its loop-invariant frames — and the sweep
+    must free exactly the loop's own blocks, never a block persisted
     concurrently by another user of the session."""
     sc = spark.sparkContext
     # a bystander persisted frame sharing the session
@@ -108,21 +145,22 @@ def test_kcore_no_storage_growth_across_rounds(spark):
     def persistent_ids():
         return set(sc._jsc.getPersistentRDDs().keySet().toArray())
 
-    from gravity_spark.functions.dedup import _checkpoint_rdd_id
+    from gravity_spark.functions.graph import _checkpoint_rdd_id
 
     bystander_id = _checkpoint_rdd_id(bystander)
     before = persistent_ids()
     chain = _edges(spark, [(i, i + 1) for i in range(11)])
-    core, rounds = G.kcore(chain, 2)
-    assert rounds > 4
+    out = _LOOPS[loop](chain)
     after = persistent_ids()
-    # exactly one new persistent RDD, and it is the returned core's own
-    # checkpoint. (Assert on the ADDED set and the bystander's specific
-    # id — NOT `before <= after`: in a full-suite session Spark's
+    # the new persistent RDDs are exactly the checkpoints the result
+    # reads. (Assert on the ADDED set and the bystander's specific id —
+    # NOT `before <= after`: in a full-suite session Spark's
     # ContextCleaner may concurrently unpersist stale RDDs from earlier
-    # tests, which is not kcore's sweep and made the set-inclusion
+    # tests, which is not the loop's sweep and made the set-inclusion
     # form flaky.)
-    assert after - before == {_checkpoint_rdd_id(core)}
+    read = _checkpoints_read(out)
+    assert read and after - before == read
+    assert out.count() > 0 or loop == "kcore"  # a path has no 2-core
     # the bystander's blocks survived the sweep (still recomputable)
     assert bystander_id in after
     assert bystander.count() == 100

@@ -384,9 +384,8 @@ def test_vacuum_reclaims_fully_deleted_partition(spark, tmp_path):
 
 
 def test_vacuum_keeps_slash_valued_partition(spark, tmp_path):
-    """A value with '/' in it nests its scope dir (p=api/v1 is value
-    'api/v1'); vacuum must not take the top 'p=api' dir for a deleted
-    partition and remove the live one under it."""
+    """A value with '/' in it gets one flat scope dir (p=api%2Fv1 is
+    value 'api/v1'); vacuum keeps its current version."""
     root = tmp_path / "sl"
     t = ParquetMergeTarget(
         spark, str(root), ["id"], "id long, dt string, v string", partition_col="dt",
@@ -395,11 +394,38 @@ def test_vacuum_keeps_slash_valued_partition(spark, tmp_path):
         op = "insert" if epoch == 0 else "update"
         t.apply_batch(_batch(spark, [(1, "api/v1", f"x{epoch}", op, epoch + 1)]), epoch_id=epoch)
     assert t.partition_version("api/v1") == 3
-    assert sorted(os.listdir(root / "p=api" / "v1")) == ["v1", "v2", "v3"]
+    assert sorted(os.listdir(root / "p=api%2Fv1")) == ["v1", "v2", "v3"]
 
     assert t.vacuum(keep_last=1) == 2
-    assert sorted(os.listdir(root / "p=api" / "v1")) == ["v3"]
+    assert sorted(os.listdir(root / "p=api%2Fv1")) == ["v3"]
     assert [(r["id"], r["v"]) for r in t.read().collect()] == [(1, "x2")]
+
+
+def test_prefix_and_slash_values_in_one_epoch(spark, tmp_path):
+    """'api' and 'api/v1' (and the '%' values that escaping must keep
+    apart from them) are distinct scopes: one epoch inserting all of
+    them commits, reads back, and vacuums without touching a live
+    partition."""
+    root = tmp_path / "pf"
+    t = ParquetMergeTarget(
+        spark, str(root), ["id"], "id long, dt string, v string", partition_col="dt",
+    )
+    vals = ["api", "api/v1", "api%2Fv1", "a%b"]
+    t.apply_batch(
+        _batch(spark, [(i, d, f"x{i}", "insert", i) for i, d in enumerate(vals)]),
+        epoch_id=0,
+    )
+    t.apply_batch(_batch(spark, [(0, "api", "y0", "update", 9)]), epoch_id=1)
+    assert {d: t.partition_version(d) for d in vals} == {
+        "api": 2, "api/v1": 1, "api%2Fv1": 1, "a%b": 1,
+    }
+    want = {(0, "api", "y0"), (1, "api/v1", "x1"), (2, "api%2Fv1", "x2"), (3, "a%b", "x3")}
+    assert {(r["id"], r["dt"], r["v"]) for r in t.read().collect()} == want
+    assert t.vacuum(keep_last=1) == 1  # api's v1 only
+    assert {(r["id"], r["dt"], r["v"]) for r in t.read().collect()} == want
+    assert sorted(e for e in os.listdir(root) if e.startswith("p=")) == [
+        "p=a%25b", "p=api", "p=api%252Fv1", "p=api%2Fv1",
+    ]
 
 
 def test_vacuum_spares_uncommitted_partition(spark, tmp_path):

@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from tools.dedup_scale_probe import probe_session, shuffle_write_bytes
+from tools.probe_spark import probe_session, shuffle_write_bytes
 from gravity_spark.functions.similarity import (
     cosine_similarity,
     default_bands,

@@ -30,11 +30,10 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, "/root/repo/tools")
 
 from pyspark.sql import functions as F
 
-from dedup_scale_probe import probe_session, shuffle_write_bytes
+from tools.probe_spark import probe_session, shuffle_write_bytes
 
 _HP = 2147483647
 _HA = 2654435761
